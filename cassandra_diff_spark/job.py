@@ -4,27 +4,33 @@ loop over declarative per-table diff plans).
 
 Lifecycle (mirrors SURVEY.md §3.1):
   ANALYZE  resolve providers + table list (explicit or auto-discovered)
-  PLAN     token-range splits (equal-width over the xxhash64 ring)
-  EXECUTE  per (table, split): build_diff -> stats + mismatch journal
-           — Spark's scheduler replaces the executor/comparison-pool
-           machinery (ST7/ST8 deleted by design)
-  COMMIT   per-table accumulate (A4) -> job_results; mutex released
+  PLAN     token-range splits (equal-width over the xxhash64 ring); the
+           diff plan kind (column-digest, digest or classic) is chosen
+           once per job
+  EXECUTE  per (table, split): one diff plan -> mismatch journal, whose
+           write also yields the 9 counters — Spark's scheduler replaces
+           the executor/comparison-pool machinery (ST7/ST8 deleted by
+           design)
+  COMMIT   whole-job accumulate (A4) = journaled units + this run's
+           units -> job_results; mutex released
 
 Resume (ST2/P7): completed (table, split) units are anti-joined away from
 the work list; units are idempotent so a killed job re-runs only pending
-work. Split prefiltering by token range is parity-exact: the reference's
-split scan is the same half-open token-range predicate on both sides
-(DiffCluster.java:226-227).
+work, and a re-run reports the WHOLE job — its COMMIT starts from the
+journaled units' counters. Split prefiltering by token range is
+parity-exact: the reference's split scan is the same half-open
+token-range predicate on both sides (DiffCluster.java:226-227).
 """
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_diff_spark.config import JobConfig, TableConfig
+from cassandra_diff_spark.config import JobConfig
 from cassandra_diff_spark.functions.keys import (
     sample_predicate,
     specific_tokens_predicate,
@@ -33,7 +39,17 @@ from cassandra_diff_spark.functions.keys import (
 )
 from cassandra_diff_spark.journal import Journal
 from cassandra_diff_spark.model import STAT_FIELDS, DiffStats, TableSpec
-from cassandra_diff_spark.operators.diff import build_diff, order_invariance_check
+from cassandra_diff_spark.operators.diff import (
+    build_diff,
+    mismatches_from_detail,
+    order_invariance_check,
+    stats_observation_exprs,
+)
+from cassandra_diff_spark.operators.digest import (
+    column_prune_plan,
+    digest_prune_plan,
+    write_snapshot_from_compare_rows,
+)
 from cassandra_diff_spark.plans.splits import MURMUR3_MAX, MURMUR3_MIN, calculate_splits
 from cassandra_diff_spark.sources.catalog import resolve_tables, table_config_for
 
@@ -113,32 +129,18 @@ def run_job(
             "qualified_table_name string, split int, bucket int, start bigint, end bigint",
         )
         pending = journal.filter_pending(units, job_id, rerun=rerun).collect()
+        plan = _diff_planner(cfg, job_id, splits_per_table)
 
-        # filters shared by every table (P5 / SA1)
-        token_filter = None
-        if cfg.specific_tokens:
-            token_filter = lambda t: specific_tokens_predicate(  # noqa: E731
-                t, cfg.specific_tokens, cfg.specific_tokens_mode
-            )
-        sampler = None
-        if cfg.partition_sampling_probability < 1.0:
-            sampler = lambda t: sample_predicate(  # noqa: E731
-                t, cfg.partition_sampling_probability, job_seed(job_id)
-            )
-
-        # EXECUTE
-        per_table: dict[str, DiffStats] = {}
+        # EXECUTE, accumulating on top of the units earlier runs journaled
+        # (a rerun re-executes every unit, so it starts from nothing)
+        per_table = {} if rerun else journal.results_from_task_status(job_id)
         for unit in pending:
             table = unit.qualified_table_name
             try:
                 tcfg = table_config_for(cfg, table)
                 if tcfg is None:
                     raise ValueError(f"no key roles configured for table {table}")
-                spec = TableSpec(
-                    name=table,
-                    partition_key=tcfg.partition_key,
-                    clustering=tcfg.clustering,
-                )
+                spec = TableSpec(table, tcfg.partition_key, tcfg.clustering)
                 src = _tagged_read(src_provider, spark, table, "SOURCE")
                 tgt = _tagged_read(tgt_provider, spark, table, "TARGET")
                 spec.validate_against(src.columns, tgt.columns)  # P9
@@ -150,175 +152,6 @@ def run_job(
                         token_range_predicate(token_expr(pk), unit.start, unit.end)
                     )
                     src, tgt = rng(src), rng(tgt)
-
-                def _diff_range(s_df, t_df):
-                    # single-action execution: instrument partition_detail
-                    # with an Observation so the mismatch write ALSO yields
-                    # the 9 counters — the diff plan runs once, not twice
-                    # (the custom-rule opportunity noted in SURVEY.md §4,
-                    # realized with observe() instead of a Catalyst rule)
-                    from pyspark.sql import Observation
-
-                    from cassandra_diff_spark.operators.diff import (
-                        mismatches_from_detail,
-                        stats_observation_exprs,
-                    )
-
-                    use_digest = (
-                        cfg.digest_buckets > 0
-                        and token_filter is None
-                        and sampler is None
-                    )
-                    use_columns = (
-                        use_digest
-                        and cfg.digest_columns
-                        and cfg.align == "set"
-                        and cfg.digest_unique_keys
-                    )
-                    if use_digest and cfg.digest_columns and not use_columns:
-                        import warnings
-
-                        warnings.warn(
-                            "digest_columns ignored: requires align='set' "
-                            "and digest_unique_keys=true (per-column "
-                            "digests are unsound under duplicate full "
-                            "keys) — falling back to whole-row digests",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
-                    if use_columns:
-                        # column-granular pruning: phase 2 reads only
-                        # pk + drifted columns of value-dirty buckets.
-                        # Single-execution like the other paths: one
-                        # mismatch-write action over the unioned detail
-                        # satisfies BOTH branch Observations; the
-                        # value branch's projection-relative counters
-                        # are globalized with the clean-column credit.
-                        from cassandra_diff_spark.operators.digest import (
-                            column_prune_plan,
-                        )
-
-                        plan = column_prune_plan(
-                            s_df, t_df, spec, n_buckets=cfg.digest_buckets
-                        )
-                        obs_v, obs_k = Observation(), Observation()
-                        detail = plan.value_result.partition_detail.observe(
-                            obs_v, *stats_observation_exprs()
-                        ).unionByName(
-                            plan.key_result.partition_detail.observe(
-                                obs_k, *stats_observation_exprs()
-                            )
-                        )
-                        mm = mismatches_from_detail(detail, pk)
-                        wrote = journal.record_mismatches(
-                            job_id, unit.bucket, table, mm
-                        )
-                        if wrote:
-                            stats = DiffStats(**obs_v.get)
-                            stats.matched_values += (
-                                stats.matched_rows
-                                * plan.n_clean_value_columns
-                            )
-                            stats.accumulate(DiffStats(**obs_k.get))
-                        else:  # journal sink failed — direct action
-                            stats = DiffStats.from_row(
-                                plan.value_result.stats.collect()[0]
-                            )
-                            stats.matched_values += (
-                                stats.matched_rows
-                                * plan.n_clean_value_columns
-                            )
-                            stats.accumulate(
-                                DiffStats.from_row(
-                                    plan.key_result.stats.collect()[0]
-                                )
-                            )
-                        stats.accumulate(
-                            DiffStats.from_row(plan.clean_credit.collect()[0])
-                        )
-                        return stats
-                    if use_digest:
-                        # two-phase digest-pruned diff: the wide shuffle
-                        # touches only drifted buckets (lossless — see
-                        # operators/digest.py). Sampling/token filters
-                        # change key visibility post-join, which the
-                        # clean-bucket credit can't reproduce, so they
-                        # force the classic path. Single-execution, like
-                        # the classic path: phase 1 ran once inside
-                        # digest_prune_plan (kilobyte action), the pruned
-                        # phase-2 detail is observe()-instrumented so the
-                        # mismatch write also yields the dirty-side
-                        # counters, and the clean buckets' matched credit
-                        # is one keys-only-projection action.
-                        from cassandra_diff_spark.operators.digest import (
-                            digest_prune_plan,
-                        )
-
-                        plan = digest_prune_plan(
-                            s_df, t_df, spec,
-                            n_buckets=cfg.digest_buckets,
-                            align=cfg.align, skew_safe=cfg.skew_safe,
-                            unique_keys=cfg.digest_unique_keys,
-                        )
-                        if cfg.snapshot_path and splits_per_table == 1:
-                            # the compare rows ARE both sides' digest
-                            # vectors — persist tonight's snapshots for
-                            # drift_report, zero extra scans (partial
-                            # split digests would not be table snapshots,
-                            # hence the splits_per_table gate)
-                            from cassandra_diff_spark.operators.digest import (
-                                write_snapshot_from_compare_rows,
-                            )
-
-                            write_snapshot_from_compare_rows(
-                                spark, plan.compare_rows,
-                                snapshot_dir(cfg.snapshot_path, table),
-                                n_buckets=cfg.digest_buckets,
-                                src_snapshot_id=f"{job_id}:source",
-                                tgt_snapshot_id=f"{job_id}:target",
-                            )
-                        obs = Observation()
-                        detail = plan.result.partition_detail.observe(
-                            obs, *stats_observation_exprs()
-                        )
-                        mm = mismatches_from_detail(detail, pk)
-                        wrote = journal.record_mismatches(
-                            job_id, unit.bucket, table, mm
-                        )
-                        if wrote:
-                            dirty_stats = DiffStats(**obs.get)
-                        else:  # journal sink failed — direct action
-                            dirty_stats = DiffStats.from_row(
-                                plan.result.stats.collect()[0]
-                            )
-                        dirty_stats.accumulate(
-                            DiffStats.from_row(plan.clean_credit.collect()[0])
-                        )
-                        return dirty_stats
-                    if cfg.digest_buckets > 0:
-                        import warnings
-
-                        warnings.warn(
-                            "digest_buckets ignored: sampling or "
-                            "specific_tokens filters are active",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
-                    res = build_diff(
-                        s_df, t_df, spec,
-                        align=cfg.align, token_filter=token_filter,
-                        sampler=sampler, skew_safe=cfg.skew_safe,
-                    )
-                    obs = Observation()
-                    detail = res.partition_detail.observe(
-                        obs, *stats_observation_exprs()
-                    )
-                    mm = mismatches_from_detail(detail, pk)
-                    wrote = journal.record_mismatches(job_id, unit.bucket, table, mm)
-                    if wrote:
-                        return DiffStats(**obs.get)
-                    # journal sink failed — fall back to a direct action
-                    return DiffStats.from_row(res.stats.collect()[0])
 
                 if mid_split_chunks > 1:
                     # ST2 mid-split resume: the split runs as contiguous
@@ -332,27 +165,22 @@ def run_job(
                     # Journaling is at-least-once: a crash between the
                     # mismatch write and the progress write re-runs that
                     # one chunk (same envelope as the reference).
-                    chunks = [
-                        (c.start, c.end)
-                        for c in calculate_splits(
-                            mid_split_chunks, 1, unit.start, unit.end
-                        )
-                    ]
                     watermark = journal.split_watermark(job_id, table, unit.split)
-                    stats = journal.progress_stats(
-                        job_id, table, unit.split
-                    ) or DiffStats()
-                    for cs, ce in chunks:
-                        if watermark is not None and ce <= watermark:
+                    stats = journal.progress_stats(job_id, table, unit.split) or DiffStats()
+                    for c in calculate_splits(mid_split_chunks, 1, unit.start, unit.end):
+                        if watermark is not None and c.end <= watermark:
                             continue  # journaled by a previous run
-                        pred = token_range_predicate(token_expr(pk), cs, ce)
-                        chunk_stats = _diff_range(src.filter(pred), tgt.filter(pred))
+                        pred = token_range_predicate(token_expr(pk), c.start, c.end)
+                        chunk_stats = _diff_range(
+                            plan, journal, job_id, unit.bucket, spec,
+                            src.filter(pred), tgt.filter(pred),
+                        )
                         stats.accumulate(chunk_stats)
                         journal.record_progress(
-                            job_id, unit.bucket, table, unit.split, ce, chunk_stats
+                            job_id, unit.bucket, table, unit.split, c.end, chunk_stats
                         )
                 else:
-                    stats = _diff_range(src, tgt)
+                    stats = _diff_range(plan, journal, job_id, unit.bucket, spec, src, tgt)
                 journal.update_task_status(
                     job_id, unit.bucket, table, unit.split,
                     {f: getattr(stats, f) for f in STAT_FIELDS}, unit.end,
@@ -402,29 +230,7 @@ def run_job(
 
         # COMMIT: final per-table stats (A4 global accumulate)
         if per_table:
-            rows = [
-                {"table": t, **{f: getattr(s, f) for f in STAT_FIELDS}}
-                for t, s in sorted(per_table.items())
-            ]
-            stats_df = spark.createDataFrame(rows).select(
-                "table", *[F.col(f).cast("long") for f in STAT_FIELDS]
-            )
-            journal.finalize_job(job_id, stats_df)
-        elif not journal.is_finalized(job_id):
-            # resume after a crash BETWEEN the last unit completing and
-            # finalize committing: the work list is empty but job_results
-            # was never written — rebuild the A4 accumulation from the
-            # journaled task_status rows and commit it now (the keyed
-            # finalize write is idempotent, so racing replays are safe)
-            rebuilt = journal.results_from_task_status(job_id)
-            if rebuilt is not None:
-                journal.finalize_job(job_id, rebuilt)
-                per_table = {
-                    r.table: DiffStats(**{f: r[f] for f in STAT_FIELDS})
-                    for r in rebuilt.collect()
-                }
-            else:
-                journal.mark_not_running(job_id)
+            journal.finalize_job(job_id, per_table)
         else:
             journal.mark_not_running(job_id)
 
@@ -435,6 +241,109 @@ def run_job(
     except Exception:
         journal.mark_not_running(job_id)  # DiffJob.java:190-196
         raise
+
+
+def _diff_planner(cfg: JobConfig, job_id: str, splits_per_table: int):
+    """Choose the job's diff plan kind once — column-digest, digest or
+    classic — warning once when a configured digest mode cannot apply.
+    Returns ``plan(s_df, t_df, spec) -> (detail, clean_credit)``:
+    ``detail`` is a lazy partition_detail frame with global counters,
+    ``clean_credit`` a one-row STAT_FIELDS frame for the digest-proven
+    clean buckets, or None on the classic path."""
+    token_filter = sampler = None  # filters shared by every table (P5 / SA1)
+    if cfg.specific_tokens:
+        token_filter = lambda t: specific_tokens_predicate(  # noqa: E731
+            t, cfg.specific_tokens, cfg.specific_tokens_mode
+        )
+    if cfg.partition_sampling_probability < 1.0:
+        sampler = lambda t: sample_predicate(  # noqa: E731
+            t, cfg.partition_sampling_probability, job_seed(job_id)
+        )
+
+    # Sampling/token filters change key visibility post-join, which the
+    # clean-bucket credit can't reproduce, so they force the classic path
+    use_digest = cfg.digest_buckets > 0 and token_filter is None and sampler is None
+    use_columns = (
+        use_digest and cfg.digest_columns and cfg.align == "set" and cfg.digest_unique_keys
+    )
+    if cfg.digest_buckets > 0 and not use_digest:
+        warnings.warn(
+            "digest_buckets ignored: sampling or specific_tokens filters are active",
+            RuntimeWarning, stacklevel=3,
+        )
+    elif use_digest and cfg.digest_columns and not use_columns:
+        warnings.warn(
+            "digest_columns ignored: requires align='set' and "
+            "digest_unique_keys=true (per-column digests are unsound under "
+            "duplicate full keys) — falling back to whole-row digests",
+            RuntimeWarning, stacklevel=3,
+        )
+
+    if use_columns:
+        # column-granular pruning: phase 2 reads only pk + drifted columns
+        # of value-dirty buckets (operators/digest.py)
+        def plan(s_df, t_df, spec):
+            p = column_prune_plan(s_df, t_df, spec, n_buckets=cfg.digest_buckets)
+            return p.result.partition_detail, p.clean_credit
+
+    elif use_digest:
+        # two-phase digest-pruned diff: phase 1 ran once inside
+        # digest_prune_plan (kilobyte action); the wide shuffle touches
+        # only drifted buckets (lossless — see operators/digest.py)
+        def plan(s_df, t_df, spec):
+            p = digest_prune_plan(
+                s_df, t_df, spec,
+                n_buckets=cfg.digest_buckets,
+                align=cfg.align, skew_safe=cfg.skew_safe,
+                unique_keys=cfg.digest_unique_keys,
+            )
+            if cfg.snapshot_path and splits_per_table == 1:
+                # the compare rows ARE both sides' digest vectors — persist
+                # tonight's snapshots for drift_report, zero extra scans
+                # (partial split digests would not be table snapshots,
+                # hence the splits_per_table gate)
+                write_snapshot_from_compare_rows(
+                    s_df.sparkSession, p.compare_rows,
+                    snapshot_dir(cfg.snapshot_path, spec.name),
+                    n_buckets=cfg.digest_buckets,
+                    src_snapshot_id=f"{job_id}:source",
+                    tgt_snapshot_id=f"{job_id}:target",
+                )
+            return p.result.partition_detail, p.clean_credit
+
+    else:
+        def plan(s_df, t_df, spec):
+            res = build_diff(
+                s_df, t_df, spec,
+                align=cfg.align, token_filter=token_filter,
+                sampler=sampler, skew_safe=cfg.skew_safe,
+            )
+            return res.partition_detail, None
+
+    return plan
+
+
+def _diff_range(
+    plan, journal: Journal, job_id: str, bucket: int, spec: TableSpec,
+    s_df: DataFrame, t_df: DataFrame,
+) -> DiffStats:
+    """One token range through ``plan``, single-action: the detail is
+    instrumented with an Observation, so the mismatch write ALSO yields the
+    9 counters and the diff plan runs once, not twice (the custom-rule
+    opportunity noted in SURVEY.md §4, realized with observe() instead of
+    a Catalyst rule). The clean-bucket credit, when the plan has one, is
+    one more small action."""
+    detail, clean_credit = plan(s_df, t_df, spec)
+    obs = Observation()
+    observed = detail.observe(obs, *stats_observation_exprs())
+    mm = mismatches_from_detail(observed, list(spec.partition_key))
+    if journal.record_mismatches(job_id, bucket, spec.name, mm):
+        stats = DiffStats(**obs.get)
+    else:  # journal sink failed — count with a direct action instead
+        stats = DiffStats.from_row(detail.agg(*stats_observation_exprs()).collect()[0])
+    if clean_credit is not None:
+        stats.accumulate(DiffStats.from_row(clean_credit.collect()[0]))
+    return stats
 
 
 def snapshot_dir(snapshot_path: str, table: str) -> str:
@@ -514,8 +423,6 @@ def run_validation(spark: SparkSession, cfg: JobConfig) -> DataFrame:
     anti-join per foreign_key rule (operators/validate.py); foreign-key
     references read through the SAME side's provider, so a source-side
     FK check never touches the target cluster."""
-    from pyspark.sql import functions as F
-
     from cassandra_diff_spark.operators.validate import (
         check_rules,
         rules_from_config,

@@ -17,8 +17,9 @@ by predicate queries over job_summary — Spark needs no manual secondary
 indexes (SURVEY.md §2.4 J5). The C* ``counter`` completed-count
 (JobMetadataDb.java:543-549) is derived as a count(*) view (A6).
 
-Progress writes are best-effort (ST9): failures are swallowed after
-retries, correctness never depends on the journal.
+Progress writes are best-effort (ST9): a write that still fails after
+its retries emits a ``RuntimeWarning`` and returns False instead of
+raising; correctness never depends on the journal.
 """
 
 from __future__ import annotations
@@ -26,13 +27,15 @@ from __future__ import annotations
 import json
 import os
 import time
+import warnings
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_diff_spark.config import JobConfig
-from cassandra_diff_spark.model import STAT_FIELDS
+from cassandra_diff_spark.model import STAT_FIELDS, DiffStats
 from cassandra_diff_spark.retry import strategy_for
 
 #: Schema of the job_summary table (init_job's Row) — used to build an
@@ -60,15 +63,27 @@ class Journal:
     def _table(self, name: str) -> str:
         return os.path.join(self.path, name)
 
-    def _append(self, name: str, df: DataFrame) -> bool:
+    def _best_effort(self, what: str, write: Callable[[], None]) -> bool:
+        """The best-effort envelope (ST9) of every journal write: run
+        ``write`` under the configured retry strategy; a failure that
+        outlives the retries becomes a ``RuntimeWarning`` and a False
+        return, never an exception."""
         retry = strategy_for(self.retry_opts) if self.retry_opts else None
-        write = lambda: df.write.mode("append").parquet(self._table(name))  # noqa: E731
         try:
             (retry.retry(write) if retry else write())
             return True
         except Exception as e:  # noqa: BLE001 — best-effort (ST9)
-            print(f"journal write to {name} failed (ignored): {e}")
+            warnings.warn(
+                f"journal write to {what} failed (ignored): {e}",
+                RuntimeWarning,
+                stacklevel=3,
+            )
             return False
+
+    def _append(self, name: str, df: DataFrame) -> bool:
+        return self._best_effort(
+            name, lambda: df.write.mode("append").parquet(self._table(name))
+        )
 
     def _read(self, name: str) -> DataFrame | None:
         p = self._table(name)
@@ -87,8 +102,7 @@ class Journal:
         old content or the new content, never a partial file. Re-writing
         the same key REPLACES the file — an idempotent upsert, so a crash
         replay can never duplicate rows the way append-mode could.
-        Best-effort envelope (ST9) preserved: failures are swallowed
-        after retries."""
+        Best-effort envelope (ST9), like :meth:`_append`."""
         import shutil
 
         d = self._table(name)
@@ -105,13 +119,7 @@ class Journal:
             os.replace(os.path.join(stage, part), target)
             shutil.rmtree(stage, ignore_errors=True)
 
-        retry = strategy_for(self.retry_opts) if self.retry_opts else None
-        try:
-            (retry.retry(write) if retry else write())
-            return True
-        except Exception as e:  # noqa: BLE001 — best-effort (ST9)
-            print(f"journal keyed write to {name}/{fname} failed (ignored): {e}")
-            return False
+        return self._best_effort(f"{name}/{fname}", write)
 
     # ------------------------------------------------------------ lifecycle
 
@@ -301,9 +309,10 @@ class Journal:
             return None
         return DiffStats(**{f: int(row[f]) for f in STAT_FIELDS})
 
-    def record_mismatches(self, job_id: str, bucket: int, table: str, mismatches: DataFrame) -> None:
+    def record_mismatches(self, job_id: str, bucket: int, table: str, mismatches: DataFrame) -> bool:
         """S9: bulk mismatch sink — the join output filtered to mismatch
-        rows, written distributed (no driver loop)."""
+        rows, written distributed (no driver loop). False iff the write
+        failed (best-effort envelope)."""
         out = mismatches.select(
             F.lit(job_id).alias("job_id"),
             F.lit(bucket).alias("bucket"),
@@ -337,16 +346,18 @@ class Journal:
                 ),
             )
 
-    def finalize_job(self, job_id: str, stats_df: DataFrame) -> None:
+    def finalize_job(self, job_id: str, stats: dict[str, DiffStats]) -> None:
         """S11: final per-table results (JobMetadataDb.java:432-469).
 
         Exactly-once: the whole per-job result set lands as ONE atomic
         keyed file — a crashed finalize leaves nothing visible, a
         replayed finalize replaces its own rows (never appends
         duplicates), matching the reference's LWT-batch commit."""
-        self._atomic_keyed_write(
-            "job_results", stats_df.withColumn("job_id", F.lit(job_id)), job_id
+        df = self.spark.createDataFrame(
+            [(t, *[getattr(s, f) for f in STAT_FIELDS]) for t, s in sorted(stats.items())],
+            "table string, " + ", ".join(f"{f} bigint" for f in STAT_FIELDS),
         )
+        self._atomic_keyed_write("job_results", df.withColumn("job_id", F.lit(job_id)), job_id)
         self.mark_not_running(job_id)
 
     def is_finalized(self, job_id: str) -> bool:
@@ -357,20 +368,19 @@ class Journal:
             jr.filter(F.col("job_id") == job_id).head(1)
         )
 
-    def results_from_task_status(self, job_id: str) -> DataFrame | None:
-        """Rebuild the per-table final accumulation (A4) from journaled
-        unit rows — the resume path for a job that crashed BETWEEN its
-        last unit completing and finalize_job committing."""
-        ts = self._read("task_status")
-        if ts is None:
-            return None
+    def results_from_task_status(self, job_id: str) -> dict[str, DiffStats]:
+        """Per-table accumulation (A4) of the job's journaled unit rows —
+        the seed of a resumed job's COMMIT, so the result covers the units
+        earlier runs completed as well as the ones this run executes."""
+        done = self.completed_units(job_id)
+        if done is None:
+            return {}
         rows = (
-            ts.filter(F.col("job_id") == job_id)
-            .groupBy(F.col("qualified_table_name").alias("table"))
+            done.groupBy(F.col("qualified_table_name").alias("table"))
             .agg(*[F.sum(f).cast("long").alias(f) for f in STAT_FIELDS])
-            .orderBy("table")
+            .collect()
         )
-        return rows if rows.head(1) else None
+        return {r.table: DiffStats.from_row(r) for r in rows}
 
     # ------------------------------------------------------ planning params
 
@@ -403,16 +413,16 @@ class Journal:
     # --------------------------------------------------------------- resume
 
     def completed_units(self, job_id: str) -> DataFrame | None:
-        return self._read("task_status")
+        """The job's journaled task_status rows (None while the journal has
+        no task_status table at all)."""
+        ts = self._read("task_status")
+        return None if ts is None else ts.filter(F.col("job_id") == job_id)
 
     def filter_pending(self, units: DataFrame, job_id: str, rerun: bool = False) -> DataFrame:
         """P7/ST2: anti-join pending work against journaled completions
         (Differ.filterTables, Differ.java:263-285). ``rerun`` reprocesses
         completed units (rerun-for-errors mode, Differ.java:166-169)."""
-        done = self.completed_units(job_id)
-        if done is not None:
-            done = done.filter(F.col("job_id") == job_id)
-        return pending_units(units, done, rerun=rerun)
+        return pending_units(units, self.completed_units(job_id), rerun=rerun)
 
     # ---------------------------------------------------------------- views
 

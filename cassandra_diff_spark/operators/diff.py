@@ -423,27 +423,9 @@ def _finalize_from_per_part(
     )
 
     mismatches = mismatches_from_detail(partition_detail, pk)
-
-    def n(cat: str) -> Column:
-        return F.coalesce(
-            F.sum(F.when(F.col("category") == cat, 1).otherwise(0)), F.lit(0)
-        ).cast("long")
-
-    stats = partition_detail.agg(
-        n(CAT_MATCHED).alias("matched_partitions"),
-        n(CAT_MISMATCHED).alias("mismatched_partitions"),
-        F.lit(0).cast("long").alias("error_partitions"),
-        n(CAT_SKIPPED).alias("skipped_partitions"),
-        n(CAT_ONLY_IN_SOURCE).alias("only_in_source"),
-        n(CAT_ONLY_IN_TARGET).alias("only_in_target"),
-        F.coalesce(F.sum("matched_rows"), F.lit(0)).cast("long").alias("matched_rows"),
-        F.coalesce(F.sum("matched_values"), F.lit(0))
-        .cast("long")
-        .alias("matched_values"),
-        F.coalesce(F.sum("mismatched_values"), F.lit(0))
-        .cast("long")
-        .alias("mismatched_values"),
-    ).select(F.lit(spec.name).alias("table"), *STAT_FIELDS)
+    stats = partition_detail.agg(*stats_observation_exprs()).select(
+        F.lit(spec.name).alias("table"), *STAT_FIELDS
+    )
 
     return DiffResult(
         partition_detail=partition_detail, mismatches=mismatches, stats=stats
@@ -524,7 +506,8 @@ def value_mismatch_by_column(
 #: Observation expressions computing the 9 RangeStats counters from a
 #: ``partition_detail`` frame — attach via ``df.observe(Observation(), *...)``
 #: so one action (e.g. the mismatch write) yields the stats as a side
-#: product instead of executing the diff plan twice (job.py uses this).
+#: product instead of executing the diff plan twice (job.py uses this);
+#: every DiffResult's ``stats`` aggregates the same expressions.
 def stats_observation_exprs() -> list:
     def n(cat: str) -> Column:
         return F.coalesce(

@@ -47,7 +47,11 @@ from pyspark.sql import functions as F
 from cassandra_diff_spark.model import STAT_FIELDS, TableSpec
 from cassandra_diff_spark.functions.keys import token_expr
 from cassandra_diff_spark.functions.text import md5_hash64, md5_hash64_sql
-from cassandra_diff_spark.operators.diff import DiffResult, build_diff
+from cassandra_diff_spark.operators.diff import (
+    DiffResult,
+    build_diff,
+    stats_observation_exprs,
+)
 
 #: Modulus for the order-independent sum digest: 2^61-1 (Mersenne), well
 #: under bigint range after the mod, summed as DECIMAL(38,0) so ~1e19 rows
@@ -207,6 +211,17 @@ class DigestPrunePlan:
     def dirty_fraction(self) -> float:
         n = sum(1 for r in self.compare_rows if r.dirty)
         return n / self.n_buckets if self.n_buckets else 0.0
+
+
+def _stats_with_credit(stats: DataFrame, credit: DataFrame, table: str) -> DataFrame:
+    """The one-row stats frame of a pruned diff: the dirty subset's
+    STAT_FIELDS counters plus the clean buckets' credit, tagged with the
+    table name."""
+    return (
+        stats.unionByName(credit)
+        .agg(*[F.sum(c).cast("long").alias(c) for c in STAT_FIELDS])
+        .select(F.lit(table).alias("table"), *STAT_FIELDS)
+    )
 
 
 def _clean_credit_frame(
@@ -419,18 +434,12 @@ def digest_prune_diff(
         row_hash_for=row_hash_for, skew_safe=skew_safe, engine=engine,
         unique_keys=unique_keys,
     )
-    from cassandra_diff_spark.model import STAT_FIELDS
-
-    stats = (
-        plan.result.stats.drop("table")
-        .unionByName(plan.clean_credit)
-        .agg(*[F.sum(c).cast("long").alias(c) for c in STAT_FIELDS])
-        .select(F.lit(spec.name).alias("table"), *STAT_FIELDS)
-    )
     return DiffResult(
         partition_detail=plan.result.partition_detail,
         mismatches=plan.result.mismatches,
-        stats=stats,
+        stats=_stats_with_credit(
+            plan.result.stats.drop("table"), plan.clean_credit, spec.name
+        ),
     )
 
 
@@ -681,15 +690,10 @@ class ColumnPrunePlan:
     value_bucket_ids: list  # drift confined to non-key value columns
     key_bucket_ids: list  # key/count drift — full-width diff required
     dirty_value_columns: list  # union of drifted value columns
-    #: pruned-projection diff of the value-dirty buckets. NB: its stats /
-    #: partition_detail counters are PROJECTION-RELATIVE (they exclude the
-    #: unread clean columns' credit — add matched_rows x
-    #: n_clean_value_columns to matched_values to globalize them; the
-    #: combined ``result.stats`` already does).
-    value_result: DiffResult
-    key_result: DiffResult  # full-width diff of the key-dirty buckets
     clean_credit: DataFrame  # one-row STAT_FIELDS credit for clean buckets
-    n_clean_value_columns: int  # regular columns pruned from the value diff
+    #: the value- and key-dirty buckets' diff; partition_detail counters
+    #: are GLOBAL (the value branch's unread clean columns are credited
+    #: per matched row) and ``stats`` includes ``clean_credit``
     result: DiffResult
 
     @property
@@ -840,8 +844,9 @@ def column_prune_plan(
     # clean-column credit: every aligned row in a value-dirty bucket
     # matches every unread column (clean per-column digest + unique keys
     # => per-key equality), so the unread width credits per matched row
+    # — applied per partition row, so the detail's counters are global
     n_clean_cols = len(reg_all) - len(reg_proj)
-    v_stats = v_res.stats.drop("table").withColumn(
+    v_detail = v_res.partition_detail.withColumn(
         "matched_values",
         (F.col("matched_values") + F.col("matched_rows") * F.lit(n_clean_cols))
         .cast("long"),
@@ -865,19 +870,7 @@ def column_prune_plan(
         rows_from_digests=True, parts_from_digests=not ck,
     )
 
-    stats = (
-        v_stats.unionByName(k_res.stats.drop("table"))
-        .unionByName(credit)
-        .agg(*[F.sum(c).cast("long").alias(c) for c in STAT_FIELDS])
-        .select(F.lit(spec.name).alias("table"), *STAT_FIELDS)
-    )
-    result = DiffResult(
-        partition_detail=v_res.partition_detail.unionByName(
-            k_res.partition_detail
-        ),
-        mismatches=v_res.mismatches.unionByName(k_res.mismatches),
-        stats=stats,
-    )
+    detail = v_detail.unionByName(k_res.partition_detail)
     return ColumnPrunePlan(
         compare_rows=cmp_rows,
         n_buckets=n_buckets,
@@ -885,11 +878,14 @@ def column_prune_plan(
         value_bucket_ids=value_ids,
         key_bucket_ids=key_ids,
         dirty_value_columns=dirty_value_cols,
-        value_result=v_res,
-        key_result=k_res,
         clean_credit=credit,
-        n_clean_value_columns=n_clean_cols,
-        result=result,
+        result=DiffResult(
+            partition_detail=detail,
+            mismatches=v_res.mismatches.unionByName(k_res.mismatches),
+            stats=_stats_with_credit(
+                detail.agg(*stats_observation_exprs()), credit, spec.name
+            ),
+        ),
     )
 
 

@@ -96,9 +96,11 @@ class TestRunJob:
         cfg = make_cfg(src_dir, tgt_dir, jdir, job_id="job-r")
         r1 = run_job(spark, cfg)
         assert "orders" in r1.stats
-        # second run: unit journaled complete -> nothing pending
+        # second run: unit journaled complete -> nothing pending, yet the
+        # result still reports the whole job from the journaled units
         r2 = run_job(spark, cfg)
-        assert r2.stats == {}
+        assert r2.stats == r1.stats
+        assert not r2.all_matches
         # rerun flag forces reprocessing (Differ.java:166-169)
         r3 = run_job(spark, cfg, rerun=True)
         assert r3.stats["orders"] == r1.stats["orders"]
@@ -296,6 +298,130 @@ class TestMidSplitResume:
         res = run_job(spark, cfg, mid_split_chunks=4)
         assert calls2["n"] == 2, "resume must skip chunks below the watermark"
         assert res.stats["orders"] == baseline  # journaled + fresh chunks sum exactly
+
+
+class TestResumeReportsWholeJob:
+    """A resumed job's COMMIT covers every unit of the job: the units an
+    earlier, crashed run journaled plus the ones the resume executes."""
+
+    @pytest.fixture(scope="class")
+    def two_table_dirs(self, spark, sf_dir, tmp_path_factory):
+        base = tmp_path_factory.mktemp("two")
+        src_dir, tgt_dir = str(base / "src"), str(base / "tgt")
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        orders.write.parquet(f"{src_dir}/orders.parquet")
+        li.write.parquet(f"{src_dir}/lineitem.parquet")
+        orders.filter(F.col("o_orderkey") % 97 != 0).write.parquet(f"{tgt_dir}/orders.parquet")
+        li.withColumn(
+            "l_quantity",
+            F.when(F.col("l_orderkey") % 89 == 0, F.col("l_quantity") + 1)
+            .otherwise(F.col("l_quantity")),
+        ).write.parquet(f"{tgt_dir}/lineitem.parquet")
+        return src_dir, tgt_dir
+
+    def _cfg(self, src_dir, tgt_dir, jdir, job_id):
+        return load_config_text(
+            f"""
+            job_id: {job_id}
+            source: {{provider: parquet, options: {{path: {src_dir}}}}}
+            target: {{provider: parquet, options: {{path: {tgt_dir}}}}}
+            keyspace_tables:
+              - {{name: orders, partition_key: [o_orderkey]}}
+              - {{name: lineitem, partition_key: [l_orderkey], clustering: [l_linenumber]}}
+            metadata_options: {{path: {jdir}}}
+            retry_options: {{impl: none}}
+            """
+        )
+
+    def test_crash_at_unit_3_of_4_then_resume(
+        self, spark, two_table_dirs, tmp_path, monkeypatch
+    ):
+        from cassandra_diff_spark.sources.provider import ParquetSourceProvider
+
+        src_dir, tgt_dir = two_table_dirs
+        whole = run_job(
+            spark, self._cfg(src_dir, tgt_dir, str(tmp_path / "jw"), "whole"),
+            splits_per_table=2,
+        )
+        assert set(whole.stats) == {"orders", "lineitem"}
+
+        # 2 tables x 2 splits = 4 units, one source read each: the third
+        # source read is unit 3 of 4
+        orig = ParquetSourceProvider.read_table
+        reads = {"n": 0}
+
+        def crash_once(self, spark_, table):
+            if self.path == src_dir:
+                reads["n"] += 1
+                if reads["n"] == 3:
+                    raise RuntimeError("injected crash")
+            return orig(self, spark_, table)
+
+        monkeypatch.setattr(ParquetSourceProvider, "read_table", crash_once)
+        jdir = str(tmp_path / "jr")
+        cfg = self._cfg(src_dir, tgt_dir, jdir, "resumed")
+        with pytest.raises(Exception, match="injected crash"):
+            run_job(spark, cfg, splits_per_table=2)
+        resumed = run_job(spark, cfg, splits_per_table=2)
+        assert reads["n"] == 5  # the resume re-ran units 3 and 4 only
+
+        assert resumed.stats == whole.stats
+        assert not resumed.all_matches
+        from cassandra_diff_spark.model import STAT_FIELDS
+
+        journaled = {
+            r.table: {f: r[f] for f in STAT_FIELDS}
+            for r in JournalQueries(spark, jdir).job_results("resumed").collect()
+        }
+        assert journaled == {
+            t: {f: getattr(s, f) for f in STAT_FIELDS} for t, s in whole.stats.items()
+        }
+
+    def test_completed_units_are_per_job(self, spark, tmp_path):
+        from cassandra_diff_spark.model import DiffStats
+
+        j = Journal(spark, str(tmp_path / "jcu"))
+        j.update_task_status("a", 0, "t", 0, {"matched_rows": 3}, 0)
+        j.update_task_status("a", 0, "t", 1, {"matched_rows": 4}, 0)
+        j.update_task_status("b", 0, "t", 0, {"matched_rows": 5}, 0)
+        assert {r.job_id for r in j.completed_units("a").collect()} == {"a"}
+        assert j.results_from_task_status("a") == {"t": DiffStats(matched_rows=7)}
+        assert j.results_from_task_status("none") == {}
+
+
+class TestJournalFailureFallback:
+    """A failed mismatch write (best-effort journal) must not change the
+    job's counters: they are recounted with a direct action, and the
+    failure surfaces as a RuntimeWarning. Every plan kind's healthy
+    counters equal the classic run's (TestDigestPrunedJob,
+    TestColumnDigestJob), so one healthy classic run is the reference."""
+
+    @pytest.fixture(scope="class")
+    def healthy(self, spark, pair_dirs, tmp_path_factory):
+        jdir = str(tmp_path_factory.mktemp("jh"))
+        return run_job(spark, make_cfg(*pair_dirs, jdir, "healthy")).stats
+
+    @pytest.mark.parametrize(
+        "extra",
+        [
+            "",
+            "digest_buckets: 64",
+            "digest_buckets: 64\n        digest_columns: true\n"
+            "        digest_unique_keys: true",
+        ],
+        ids=["classic", "digest_buckets", "digest_columns"],
+    )
+    def test_counters_survive_failed_mismatch_write(
+        self, spark, pair_dirs, tmp_path, healthy, extra
+    ):
+        # a regular file where the mismatches table directory belongs
+        # makes every append to it fail
+        (tmp_path / "mismatches").write_text("not a directory")
+        with pytest.warns(RuntimeWarning, match="journal write to mismatches failed"):
+            failed = run_job(spark, make_cfg(*pair_dirs, str(tmp_path), "failed", extra))
+        assert failed.stats == healthy
+        assert failed.stats["orders"].mismatched_partitions > 0
 
 
 class TestExactlyOnceFinalize:
