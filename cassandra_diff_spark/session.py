@@ -34,7 +34,10 @@ def get_spark(
         # TIMESTAMP(NANOS) parquet surfaces as bigint nanos everywhere
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -43,3 +46,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g. A heap larger than
+    the host lets a long-lived local driver JVM grow until the kernel
+    kills it instead of collecting garbage."""
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):  # no sysconf names here
+        return "48g"
+    return f"{max(1024, min(48 * 1024, total_mb // 2))}m"
