@@ -10388,13 +10388,12 @@ def _with_stream_conf(fn):
 
 
 def ensure_stream_wrapped(queries: dict) -> dict:
-    """Wrap-at-merge safety net for the stream-conf override (r7 advice:
-    the import-time loop below only sees names registered above it — a
-    streaming gate added later, or registered in gate.py, silently ran
-    at 32 state partitions, guarded by nothing but a comment). Called on
-    the MERGED registry in ``__spark_entry__.queries()``, so every
-    'stream'-named gate gets the 8-partition drain conf no matter where
-    or when it was registered; already-wrapped entries pass through."""
+    """The one wrap path for the stream-conf override: every registry
+    consumer (``__spark_entry__.queries()``, ``bench.py``, the profiling
+    scripts) calls it on the MERGED registry, so every 'stream'-named
+    gate gets the 8-partition drain conf no matter where or when it was
+    registered (``QUERIES`` itself holds the unwrapped gates);
+    already-wrapped entries pass through."""
     return {
         n: (
             fn
@@ -10403,14 +10402,6 @@ def ensure_stream_wrapped(queries: dict) -> dict:
         )
         for n, fn in queries.items()
     }
-
-
-# NOTE: streaming gates registered above this loop wrap here at import
-# time; anything registered later is caught by ensure_stream_wrapped at
-# the __spark_entry__ merge point.
-for _name in [n for n in QUERIES if "stream" in n]:
-    QUERIES[_name] = _with_stream_conf(QUERIES[_name])
-del _name
 
 
 # ---------------------------------------------------------------------------

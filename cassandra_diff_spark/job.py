@@ -129,7 +129,9 @@ def run_job(
             "qualified_table_name string, split int, bucket int, start bigint, end bigint",
         )
         pending = journal.filter_pending(units, job_id, rerun=rerun).collect()
-        plan = _diff_planner(cfg, job_id, splits_per_table)
+        plan = _diff_planner(
+            cfg, job_id, whole_table=splits_per_table == 1 and mid_split_chunks == 1
+        )
 
         # EXECUTE, accumulating on top of the units earlier runs journaled
         # (a rerun re-executes every unit, so it starts from nothing)
@@ -243,9 +245,10 @@ def run_job(
         raise
 
 
-def _diff_planner(cfg: JobConfig, job_id: str, splits_per_table: int):
+def _diff_planner(cfg: JobConfig, job_id: str, *, whole_table: bool):
     """Choose the job's diff plan kind once — column-digest, digest or
     classic — warning once when a configured digest mode cannot apply.
+    ``whole_table``: every unit is a whole table (one split, one chunk).
     Returns ``plan(s_df, t_df, spec) -> (detail, clean_credit)``:
     ``detail`` is a lazy partition_detail frame with global counters,
     ``clean_credit`` a one-row STAT_FIELDS frame for the digest-proven
@@ -297,11 +300,11 @@ def _diff_planner(cfg: JobConfig, job_id: str, splits_per_table: int):
                 align=cfg.align, skew_safe=cfg.skew_safe,
                 unique_keys=cfg.digest_unique_keys,
             )
-            if cfg.snapshot_path and splits_per_table == 1:
+            if cfg.snapshot_path and whole_table:
                 # the compare rows ARE both sides' digest vectors — persist
                 # tonight's snapshots for drift_report, zero extra scans
-                # (partial split digests would not be table snapshots,
-                # hence the splits_per_table gate)
+                # (the digests of a split or chunk would not be table
+                # snapshots, hence the whole_table gate)
                 write_snapshot_from_compare_rows(
                     s_df.sparkSession, p.compare_rows,
                     snapshot_dir(cfg.snapshot_path, spec.name),

@@ -1700,21 +1700,7 @@ def classifier_train(
         .sortWithinPartitions("gid", "id")
         .persist()
     )
-    # AQE off for the GD loop (r13): each of the ``iters`` sequential
-    # jobs is a FIXED two-stage shape (grouped gradient -> one bounded
-    # exchange at <= nnz x n_groups rows -> driver collect) where AQE
-    # has nothing to decide — no joins, no skew, explicit partition
-    # counts — but charges a stage-materialization job + replan per
-    # iteration (interleaved A/B: 8.0 s vs 8.4-8.7 s per train, model
-    # bit-identical). Session value restored in the finally below.
-    spark_ = df.sparkSession
     try:
-        _aqe_old = spark_.conf.get("spark.sql.adaptive.enabled")
-    except Exception:  # noqa: BLE001
-        _aqe_old = None
-    try:
-        if _aqe_old is not None:
-            spark_.conf.set("spark.sql.adaptive.enabled", "false")
         n_total = base.count()
         if n_total == 0:
             raise ValueError("classifier_train: no labeled docs with features")
@@ -1803,8 +1789,6 @@ def classifier_train(
                 g[int(r["bucket"])] = float(r["g"])
             w = w - lr * (g / n_total)
     finally:
-        if _aqe_old is not None:
-            spark_.conf.set("spark.sql.adaptive.enabled", _aqe_old)
         base.unpersist()
     # vectorized quantization (a Python loop over d is real time at
     # d=2**21); np.rint is round-half-to-even, the same tie rule as the

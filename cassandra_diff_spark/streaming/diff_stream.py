@@ -15,8 +15,25 @@ Patterns:
     via foreachBatch's epoch id is left to the sink (parquet append is
     at-least-once; a Delta sink would make it exactly-once).
   * sessionize — session_window gap-based grouping.
-  * running_user_totals — applyInPandasWithState custom stateful operator
-    (running per-user aggregates with processing-time timeout).
+  * running_user_totals — applyInPandasWithState running per-user totals.
+  * the keyed-history operators — stream_asof_join (backward),
+    stream_asof_join_forward, stream_interval_join, stream_rolling_anomaly
+    and stream_transitions — are ingest / emit / prune steps over ONE
+    kernel, :func:`_keyed_history`. It owns the side-tagged union of a
+    HISTORY stream (rows banked into per-key state) and a PROBE stream
+    (rows answered against it), the ingest that splits each Arrow chunk
+    by side and banks exact Python values into parallel-array state, the
+    stable null-first row sort (plus the as-ofs' keep-greatest-tiebreak-
+    per-ts collapse), and the drain tail into an in-memory table.
+
+Per-key ordering contract (every keyed-history operator but the
+watermark-driven forward as-of): micro-batches arrive event-time-ordered
+per key, so the history rows a probe row can match sit in the same or an
+earlier batch. File sources get this from time-partitioned files stamped
+in order (see the gates), Kafka from per-key partition ordering. Under it
+every drained result equals its batch twin exactly (pytest and the
+oracle-paired gates assert it). The drains use an availableNow trigger;
+in production the same plan runs unbounded into a parquet/Delta sink.
 """
 
 from __future__ import annotations
@@ -28,29 +45,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cassandra_diff_spark.model import TableSpec
+from cassandra_diff_spark.operators.diff import build_diff
 
 _INT_STATE_TYPES = ("tinyint", "smallint", "int", "integer", "bigint", "long")
-
 
 
 def _drain(w, checkpoint: "str | None") -> None:
     """Start an availableNow writer and block until it drains.
 
     A caller-supplied ``checkpoint`` (the durable production path) is
-    honored verbatim and kept. Without one, the drain's checkpoint is
-    EPHEMERAL by definition — the result is read back from the sink and
-    nothing ever resumes the query — so it goes to a unique directory
-    on the fastest local scratch and is removed after the drain.
-    Per-trigger state-store commits are the dominant drain cost, and an
-    interleaved A/B (r12, sf0.1, medians of 3, A-B-A bracketed) measured
-    the stateful drains 20-30% faster with tmpfs scratch than with the
-    java.io.tmpdir default on disk (events_asof_stream_forward
-    18.2/20.1 s -> 14.0 s, events_asof_stream 10.0/11.1 -> 7.4,
-    events_interval_stream 6.9/7.3 -> 5.6; the foreachBatch drains
-    moved within noise). Scratch root: $SPARK_GRAFT_STREAM_SCRATCH,
-    defaulting to /dev/shm when present; without either, Spark's own
-    temp-checkpoint behavior (java.io.tmpdir, delete-on-stop) applies
-    unchanged."""
+    honored verbatim and kept. Without one the checkpoint is EPHEMERAL —
+    nothing ever resumes the query — so it goes to a unique directory on
+    the fastest local scratch and is removed after the drain: per-trigger
+    state-store commits dominate a drain, and an interleaved A/B (sf0.1,
+    medians of 3) measured the stateful drains 20-30% faster on tmpfs
+    than on the java.io.tmpdir disk default (events_asof_stream 10.0/11.1
+    -> 7.4 s). Scratch root: $SPARK_GRAFT_STREAM_SCRATCH, defaulting to
+    /dev/shm when present; without either, Spark's own temp-checkpoint
+    behavior (java.io.tmpdir, delete-on-stop) applies unchanged."""
     import os
     import shutil
     import uuid
@@ -70,19 +82,44 @@ def _drain(w, checkpoint: "str | None") -> None:
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
 
-def _py_state_values(series, spark_type):
+
+def _drain_table(
+    df: DataFrame, name: str, checkpoint: "str | None" = None, mode: str = "complete"
+) -> DataFrame:
+    """availableNow drain of ``df`` into the in-memory table ``name`` —
+    the shared tail of every memory-sink operator here."""
+    w = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+    )
+    _drain(w, checkpoint)
+    return df.sparkSession.table(name)
+
+
+def _py_state_values(a, spark_type):
     """Union pdf columns arrive as float64 (NaN on the other side's
     rows); applyInPandasWithState state arrays silently NULL a float
-    stored into an integer slot — convert to exact Python values first.
-    Shared by every stateful operator that banks payload columns from a
-    side-tagged union into state (the r8 sf0.1 sweep caught
-    stream_interval_join missing this: one cross-batch interval's
-    bigint payload came back NULL while its int()-converted bounds
-    survived)."""
+    stored into an integer slot — convert the column's numpy array to
+    exact Python values first. Every value the keyed-history kernel banks
+    into state passes through here (the r8 sf0.1 sweep caught one
+    cross-batch interval's bigint payload coming back NULL without it)."""
     import numpy as np
+    import pandas as pd
 
+    kind = a.dtype.kind
+    if kind in "iub":
+        return a.tolist()
+    if kind == "f" and spark_type in _INT_STATE_TYPES:
+        nan = np.isnan(a)
+        out = np.where(nan, 0, a).astype(np.int64).tolist()
+        for i in np.flatnonzero(nan):
+            out[i] = None
+        return out
     out = []
-    for x in series.tolist():
+    # datetimes go through pandas: Timestamps, not raw epoch integers
+    for x in (pd.Series(a) if kind in "Mm" else a).tolist():
         if x is None or (isinstance(x, float) and np.isnan(x)):
             out.append(None)
         elif spark_type in _INT_STATE_TYPES:
@@ -92,7 +129,199 @@ def _py_state_values(series, spark_type):
         else:
             out.append(x)
     return out
-from cassandra_diff_spark.operators.diff import build_diff
+
+
+# ---------------------------------------------------------------------------
+# keyed-history kernel
+
+#: out-field pseudo-type: epoch micros (``long``) in the operator's output,
+#: re-projected to ``timestamp`` on the drained frame
+_MICROS = "micros"
+
+
+def _ddl(fields) -> str:
+    """``(name, type[, alias])`` fields -> a DDL schema string."""
+    return ", ".join(
+        f"`{f[0]}` {'long' if f[1] == _MICROS else f[1]}" for f in fields
+    )
+
+
+def _side_union(hist: DataFrame, probe: DataFrame, on, cols) -> DataFrame:
+    """Side-tagged union of a HISTORY and a PROBE stream keyed by ``on``.
+    ``cols`` lists ``(name, hist_expr, probe_expr)`` in union column
+    order; a side without an expression gets a null cast to the other
+    side's type."""
+    sides = [
+        hist.select(*on, *[h.alias(n) for n, h, _ in cols if h is not None]),
+        probe.select(*on, *[p.alias(n) for n, _, p in cols if p is not None]),
+    ]
+    types = [dict(s.dtypes) for s in sides]
+    h, p = (
+        s.select(
+            *on,
+            *[
+                F.col(n) if n in own else F.lit(None).cast(other[n]).alias(n)
+                for n, _, _ in cols
+            ],
+        )
+        for s, own, other in zip(sides, types, types[::-1])
+    )
+    return h.unionByName(p)
+
+
+def _ingest(pdfs, sides):
+    """Split one key's Arrow chunks by side (``sides``: ``(tag, {col:
+    state_type | None})``, tag None for untagged input). Per side: None
+    without rows, else ``{col: values}`` over ALL chunks — a key's batch
+    can span chunks with no cross-chunk order, so steps sort only after
+    this — typed columns as exact Python values (:func:`_py_state_values`,
+    bankable into state), untyped ones as one numpy array."""
+    import numpy as np
+
+    got = [None] * len(sides)
+    for pdf in pdfs:
+        if not len(pdf):
+            continue
+        tag = pdf["__side"].to_numpy() if sides[0][0] is not None else None
+        for j, (t, cols) in enumerate(sides):
+            mask = None if tag is None else tag == t
+            if mask is not None and not mask.any():
+                continue
+            if got[j] is None:
+                got[j] = {c: [] for c in cols}
+            for c, typ in cols.items():
+                a = pdf[c].to_numpy()
+                a = a if mask is None else a[mask]
+                if typ is None:
+                    got[j][c].append(a)
+                else:
+                    got[j][c].extend(_py_state_values(a, typ))
+    for acc, (_, cols) in zip(got, sides):
+        if acc is not None:
+            for c, typ in cols.items():
+                if typ is None:
+                    acc[c] = np.concatenate(acc[c]) if len(acc[c]) > 1 else acc[c][0]
+    return got
+
+
+def _stable_order(*keys):
+    """Stable ascending row order over parallel key columns, most
+    significant first, nulls first (Spark's ASC default): one np.lexsort
+    over (not-null, value) pairs, or the equally stable Python tuple sort
+    when a key has no numeric form (strings, decimals, huge ints)."""
+    import numpy as np
+
+    cols = []  # (key, not-null flags or None, numeric form)
+    for k in keys:
+        a, nn = np.asarray(k), None
+        if a.dtype.kind in "fMm":
+            nn = ~np.isnan(a) if a.dtype.kind == "f" else ~np.isnat(a)
+            a = a if a.dtype.kind == "f" else a.view(np.int64)
+            a, nn = (a, None) if nn.all() else (np.where(nn, a, 0), nn)
+        elif a.dtype.kind == "O":
+            nn = np.fromiter(
+                (not (x is None or (isinstance(x, float) and x != x)) for x in a),
+                dtype=bool, count=len(a),
+            )
+            a = np.asarray([x if ok else 0 for x, ok in zip(a, nn)])
+        cols.append((k, nn, a))
+    if all(a.dtype.kind in "biuf" for _, _, a in cols):
+        lex = []
+        for _, nn, a in reversed(cols):
+            lex += [a] if nn is None else [a, nn]
+        return np.lexsort(lex)
+    flags = [np.ones(len(a), bool) if nn is None else nn for _, nn, a in cols]
+
+    def row(i):
+        return tuple(
+            x for (k, _, _), nn in zip(cols, flags) for x in (bool(nn[i]), k[i] if nn[i] else 0)
+        )
+
+    return np.asarray(sorted(range(len(flags[0])), key=row), dtype=np.int64)
+
+
+def _latest_per_ts(ts, tb):
+    """Indices of the greatest-tiebreak row of each distinct ``ts``, in
+    ts order (a null tiebreak loses) — the only row per timestamp an
+    as-of can ever pick."""
+    import numpy as np
+
+    order = _stable_order(ts, tb)
+    t = ts[order]
+    last = np.ones(len(t), dtype=bool)
+    last[:-1] = t[1:] != t[:-1]
+    return order[last]
+
+
+def _save(state: GroupState, *fields) -> None:
+    """Encode one key's parallel-array state (numpy columns as lists)."""
+    state.update(tuple(f.tolist() if hasattr(f, "tolist") else f for f in fields))
+
+
+def _emit(key, on, cols: dict):
+    """One key's output frame: the grouping key repeated per row, then
+    ``cols`` in out-schema order."""
+    import pandas as pd
+
+    n = len(next(iter(cols.values())))
+    return pd.DataFrame({**{c: [key[i]] * n for i, c in enumerate(on)}, **cols})
+
+
+def _keyed_history(
+    u: DataFrame,
+    on,
+    sides,
+    step,
+    *,
+    out,
+    state,
+    name: str,
+    checkpoint: "str | None",
+    mode: str = "append",
+    timeout=GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """Run one keyed-history operator and drain it. Per (key, trigger)
+    the kernel decodes the state (``state`` lists ``(field, type)``; an
+    absent key decodes array fields to ``[]`` and scalars to None),
+    ingests the chunks per ``sides`` (skipped — None — on an event-time
+    timeout) and calls ``step(key, st, got, group_state)``, which returns
+    the key's output frame or None and writes its state with
+    :func:`_save`. ``out`` lists ``(field, type[, alias])``; with aliases
+    the drained frame is re-projected to them, :data:`_MICROS` fields as
+    timestamps."""
+    arrays = [t.startswith("array<") for _, t in state]
+
+    def update(key, pdfs, gs: GroupState):
+        if gs.exists:
+            st = [list(v) if a else v for v, a in zip(gs.get, arrays)]
+        else:
+            st = [[] if a else None for a in arrays]
+        got = None if gs.hasTimedOut else _ingest(pdfs, sides)
+        res = step(key, st, got, gs)
+        if res is not None:
+            yield res
+
+    drained = _drain_table(
+        u.groupBy(*on).applyInPandasWithState(
+            update,
+            outputStructType=_ddl(out),
+            stateStructType=_ddl(state),
+            outputMode=mode,
+            timeoutConf=timeout,
+        ),
+        name,
+        checkpoint,
+        mode,
+    )
+    if all(len(f) == 2 for f in out):
+        return drained
+    return drained.select(
+        *[
+            (F.timestamp_micros(F.col(f[0])) if f[1] == _MICROS else F.col(f[0]))
+            .alias(f[2])
+            for f in out
+        ]
+    )
 
 
 def windowed_event_counts(
@@ -260,27 +489,17 @@ def digest_stream(
     and map-side-combinable, so the running digest state is exactly
     ``n_buckets`` rows no matter how much data streams through.
 
-    Runs the query with an availableNow trigger into an in-memory table
-    and returns the drained final frame: deterministic and IDENTICAL to
-    the batch :func:`~cassandra_diff_spark.operators.digest.
-    bucket_digests` over the same data (the oracle-paired gate asserts
-    this through the same DuckDB SQL as the batch digest compare). In
-    production the same plan runs unbounded (processingTime trigger,
-    parquet/Delta sink) to keep a live drift signal against a static
-    snapshot's digests."""
+    The drained frame is deterministic and IDENTICAL to the batch
+    :func:`~cassandra_diff_spark.operators.digest.bucket_digests` over
+    the same data (the oracle-paired gate asserts this through the same
+    DuckDB SQL as the batch digest compare); unbounded, it is a live
+    drift signal against a static snapshot's digests."""
     from cassandra_diff_spark.operators.digest import bucket_digests
 
     agg = bucket_digests(
         stream, spec, n_buckets=n_buckets, token=token, row_hash=row_hash
     )
-    w = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    return stream.sparkSession.table(name)
+    return _drain_table(agg, name, checkpoint)
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -370,6 +589,32 @@ def stream_minhash_dedup(
     return spark.read.parquet(out_dir)
 
 
+def _asof_plan(left, right, on, time_col, to_time, left_ts, right_ts, right_cols,
+               right_tiebreak, prefix):
+    """Both as-ofs' side-tagged union — right rows are the history (time
+    ``time_col`` = ``to_time(ts column)``, ``__tb`` tiebreak, ``__r_``
+    values), left rows the probes (time, ``__l_`` payload) — plus their
+    output fields: key, left time + payload, then the matched right time +
+    values under ``prefix``. Returns ``(union, left payload, out)``."""
+    lpayload = [c for c in left.columns if c not in on and c != left_ts]
+    u = _side_union(right, left, on, [
+        (time_col, to_time(right_ts), to_time(left_ts)),
+        ("__side", F.lit(1), F.lit(0)),
+        ("__tb", F.col(right_tiebreak) if right_tiebreak is not None else F.lit(0), None),
+        *[(f"__r_{c}", F.col(c), None) for c in right_cols],
+        *[(f"__l_{c}", None, F.col(c)) for c in lpayload],
+    ])
+    ut = dict(u.dtypes)
+    out = (
+        [(c, ut[c], c) for c in on]
+        + [("__ts", _MICROS, left_ts)]
+        + [(f"__l_{c}", ut[f"__l_{c}"], c) for c in lpayload]
+        + [("__mts", _MICROS, f"{prefix}{right_ts}")]
+        + [(f"__m_{c}", ut[f"__r_{c}"], f"{prefix}{c}") for c in right_cols]
+    )
+    return u, lpayload, out
+
+
 def stream_asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -390,12 +635,7 @@ def stream_asof_join(
     RIGHT stream row at-or-before (``strict``: strictly-before) its
     timestamp, per key — the streaming twin of
     :func:`~cassandra_diff_spark.operators.temporal.asof_join`
-    (backward), implemented as ONE ``applyInPandasWithState`` stateful
-    operator over the side-tagged union of the two streams. (The FORWARD
-    direction is deliberately absent: it needs future right rows, i.e. a
-    watermark-delayed emit — buffer left rows in state and flush them as
-    the right frontier passes; use the batch operator until a real
-    watermark-driven variant exists.)
+    (backward), under the module's per-key ordering contract.
 
     Per-key state is the right-side history, collapsed to the greatest-
     tiebreak row per timestamp (rows a backward as-of can never pick are
@@ -404,247 +644,73 @@ def stream_asof_join(
     right rows FIRST, then matches its left rows against the full
     history — so a right row matches left rows of its own batch.
 
-    Ordering contract (the same one every foreachBatch operator here
-    documents): micro-batches must arrive event-time-ordered per key —
-    a left row's candidate right rows (ts at-or-before it) must be in
-    the same or an earlier batch. File sources get this by stamping
-    time-partitioned files in order (see the gate); a Kafka deployment
-    gets it from per-key partition ordering. Under that contract the
-    drained result equals the batch operator exactly (pytest + the
-    oracle-paired gate assert it, including the tiebreak contract).
-
     ``prune_keep_us``: state TTL for 100 TB streams — right rows older
     than (key's max right ts - prune_keep_us) collapse to the single
     newest such row (the carry a backward as-of still needs). Exact as
     long as no left row arrives more than ``prune_keep_us`` behind its
     key's right-side frontier; None (default) keeps full history.
-
-    Drains an availableNow trigger into an in-memory table and returns
-    the final frame; in production the same plan runs unbounded with a
-    processingTime trigger into a parquet/Delta sink.
     """
     import numpy as np
-    import pandas as pd
 
-    on = list(on)
-    right_cols = list(right_cols)
-    ltypes = dict(left.dtypes)
-    rtypes = dict(right.dtypes)
-    lpayload = [c for c in left.columns if c not in on and c != left_ts]
-    tb_type = rtypes[right_tiebreak] if right_tiebreak is not None else "int"
-    tb = (
-        F.col(right_tiebreak) if right_tiebreak is not None else F.lit(0)
+    on, right_cols = list(on), list(right_cols)
+    u, lpayload, fields = _asof_plan(
+        left, right, on, "__ts", lambda c: F.unix_micros(F.col(c).cast("timestamp")),
+        left_ts, right_ts, right_cols, right_tiebreak, prefix,
     )
+    ut = dict(u.dtypes)
+    rv = [f"__r_{c}" for c in right_cols]
+    lv = [f"__l_{c}" for c in lpayload]
 
-    # side-tagged union; timestamps as epoch micros (pandas-friendly,
-    # no tz round-trip in state)
-    r_sel = [F.col(c) for c in on] + [
-        F.unix_micros(F.col(right_ts).cast("timestamp")).alias("__ts"),
-        F.lit(1).alias("__side"),
-        tb.alias("__tb"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
-        *[F.lit(None).cast(ltypes[c]).alias(f"__l_{c}") for c in lpayload],
-    ]
-    l_sel = [F.col(c) for c in on] + [
-        F.unix_micros(F.col(left_ts).cast("timestamp")).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(tb_type).alias("__tb"),
-        *[F.lit(None).cast(rtypes[c]).alias(f"__r_{c}") for c in right_cols],
-        *[F.col(c).alias(f"__l_{c}") for c in lpayload],
-    ]
-    u = right.select(*r_sel).unionByName(left.select(*l_sel))
-
-    key_schema = ", ".join(f"{c} {dict(u.dtypes)[c]}" for c in on)
-    out_schema = (
-        key_schema
-        + ", __ts long"
-        + "".join(f", __l_{c} {ltypes[c]}" for c in lpayload)
-        + ", __mts long"
-        + "".join(f", __m_{c} {rtypes[c]}" for c in right_cols)
-    )
-    state_schema = (
-        f"ts array<long>, tb array<{tb_type}>"
-        + "".join(f", v_{c} array<{rtypes[c]}>" for c in right_cols)
-    )
-    n_vals = len(right_cols)
-    out_cols = (
-        on
-        + ["__ts"]
-        + [f"__l_{c}" for c in lpayload]
-        + ["__mts"]
-        + [f"__m_{c}" for c in right_cols]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        # r13 (guide §4.2): the per-key body is plain numpy arrays +
-        # Python lists — the previous pandas formulation (a DataFrame
-        # rebuilt from state, pd.concat, sort_values, drop_duplicates,
-        # .iloc per emitted value) measured ~10 ms PER KEY per trigger
-        # (updateMs 15-20 s across 8 state partitions for ~1500 keys,
-        # plans/r13/*_prof_before.txt), which WAS the addBatch floor.
-        # Every value still flows verbatim (same sort order, same pick
-        # indices), so the drained result is bit-identical.
-        if state.exists:
-            st = state.get
-            h_ts = np.asarray(st[0], dtype=np.int64)
-            h_tb = list(st[1])
-            h_v = [list(st[2 + i]) for i in range(n_vals)]
-        else:
-            h_ts = np.empty(0, dtype=np.int64)
-            h_tb = []
-            h_v = [[] for _ in range(n_vals)]
-
-        l_ts_parts, l_pay_parts = [], {c: [] for c in lpayload}
-        add_ts_parts, add_tb_parts = [], []
-        add_v_parts: list = [[] for _ in range(n_vals)]
-        for pdf in pdfs:
-            side = pdf["__side"].to_numpy()
-            rmask = side == 1
-            if rmask.any():
-                add_ts_parts.append(
-                    pdf["__ts"].to_numpy()[rmask].astype(np.int64)
-                )
-                add_tb_parts.append(pdf["__tb"].to_numpy()[rmask])
-                for i, c in enumerate(right_cols):
-                    add_v_parts[i].append(
-                        pdf[f"__r_{c}"].to_numpy()[rmask]
-                    )
-            lmask = side == 0
-            if lmask.any():
-                l_ts_parts.append(
-                    pdf["__ts"].to_numpy()[lmask].astype(np.int64)
-                )
-                for c in lpayload:
-                    l_pay_parts[c].append(pdf[f"__l_{c}"].to_numpy()[lmask])
-        if add_ts_parts:
-            all_ts = np.concatenate([h_ts] + add_ts_parts)
-            all_tb = h_tb + [
-                v for part in add_tb_parts for v in part.tolist()
-            ]
-            all_v = [
-                h_v[i]
-                + [v for part in add_v_parts[i] for v in part.tolist()]
-                for i in range(n_vals)
-            ]
-            # stable sort by (ts, tb) — null tiebreak first, i.e. it
-            # LOSES — then collapse to the greatest-tb row per ts (only
-            # that row can ever be picked by a backward non-strict
-            # as-of). np.lexsort is stable; non-numeric tiebreaks take
-            # the (equally stable) Python tuple sort.
-            notnull = np.fromiter(
-                (
-                    not (
-                        v is None
-                        or (isinstance(v, float) and np.isnan(v))
-                    )
-                    for v in all_tb
-                ),
-                dtype=np.int8,
-                count=len(all_tb),
-            )
-            try:
-                tb_key = np.asarray(
-                    [
-                        0 if not nn else v
-                        for v, nn in zip(all_tb, notnull)
-                    ],
-                    dtype=np.float64
-                    if tb_type in ("float", "double")
-                    else np.int64,
-                )
-                order = np.lexsort((tb_key, notnull, all_ts))
-            except (TypeError, ValueError, OverflowError):
-                order = np.asarray(
-                    sorted(
-                        range(len(all_ts)),
-                        key=lambda i: (
-                            all_ts[i],
-                            int(notnull[i]),
-                            all_tb[i] if notnull[i] else 0,
-                        ),
-                    ),
-                    dtype=np.int64,
-                )
-            sorted_ts = all_ts[order]
-            last = np.empty(len(order), dtype=bool)
-            if len(order):
-                last[:-1] = sorted_ts[1:] != sorted_ts[:-1]
-                last[-1] = True
-            sel = order[last]
-            h_ts = all_ts[sel]
-            h_tb = [all_tb[i] for i in sel]
-            h_v = [[col[i] for i in sel] for col in all_v]
-            if prune_keep_us is not None and len(h_ts):
-                floor = int(h_ts[-1]) - int(prune_keep_us)
+    def step(key, st, got, state):
+        hist, probe = got
+        h_ts, h_tb, *h_v = st
+        h_ts = np.asarray(h_ts, dtype=np.int64)
+        if hist:
+            h_ts = np.concatenate([h_ts, hist["__ts"].astype(np.int64)])
+            h_tb += hist["__tb"]
+            h_v = [col + hist[c] for col, c in zip(h_v, rv)]
+            sel = _latest_per_ts(h_ts, h_tb)
+            h_ts, h_tb = h_ts[sel], [h_tb[i] for i in sel]
+            h_v = [[col[i] for i in sel] for col in h_v]
+            if prune_keep_us is not None:
                 # keep everything newer than the floor, plus the single
                 # newest at-or-below it (the carry)
+                floor = int(h_ts[-1]) - int(prune_keep_us)
                 cut = max(0, int(np.searchsorted(h_ts, floor, "right")) - 1)
-                if cut:
-                    h_ts = h_ts[cut:]
-                    h_tb = h_tb[cut:]
-                    h_v = [col[cut:] for col in h_v]
-            state.update((h_ts.tolist(), h_tb, *h_v))
-        if not l_ts_parts:
-            return
-        l_ts = np.concatenate(l_ts_parts)
-        if len(h_ts):
-            # rightmost history row with ts <= left ts (strict: < — the
-            # 'left' side excludes equal timestamps entirely, and the
-            # per-ts collapse can't hide anything strict would pick):
-            # searchsorted on the (ts,tb)-sorted, per-ts-collapsed history
-            pos = (
-                np.searchsorted(h_ts, l_ts, "left" if strict else "right")
-                - 1
-            )
-            ok = pos >= 0
-            if tolerance_us is not None:
-                gap = l_ts - np.where(ok, h_ts[np.maximum(pos, 0)], 0)
-                ok = ok & (gap <= int(tolerance_us))
-            mts = [int(h_ts[p]) if o else None for p, o in zip(pos, ok)]
-            mvals = {
-                f"__m_{c}": [
-                    h_v[i][p] if o else None for p, o in zip(pos, ok)
-                ]
-                for i, c in enumerate(right_cols)
-            }
-        else:
-            mts = [None] * len(l_ts)
-            mvals = {f"__m_{c}": [None] * len(l_ts) for c in right_cols}
-        out = pd.DataFrame(
-            {
-                **{c: [key[i]] * len(l_ts) for i, c in enumerate(on)},
-                "__ts": l_ts,
-                **{
-                    f"__l_{c}": np.concatenate(l_pay_parts[c])
-                    for c in lpayload
-                },
-                "__mts": mts,
-                **mvals,
-            }
-        )
-        yield out[out_cols]
+                h_ts, h_tb = h_ts[cut:], h_tb[cut:]
+                h_v = [col[cut:] for col in h_v]
+            _save(state, h_ts, h_tb, *h_v)
+        if not probe:
+            return None
+        l_ts = probe["__ts"].astype(np.int64)
+        # rightmost history row with ts <= left ts (strict: < — the
+        # per-ts collapse can't hide anything strict would pick)
+        pos = np.searchsorted(h_ts, l_ts, "left" if strict else "right") - 1
+        ok = pos >= 0
+        if tolerance_us is not None and len(h_ts):
+            ok &= l_ts - h_ts[np.maximum(pos, 0)] <= int(tolerance_us)
+        return _emit(key, on, {
+            "__ts": l_ts,
+            **{c: probe[c] for c in lv},
+            "__mts": [int(h_ts[p]) if o else None for p, o in zip(pos, ok)],
+            **{
+                f"__m_{c}": [col[p] if o else None for p, o in zip(pos, ok)]
+                for col, c in zip(h_v, right_cols)
+            },
+        })
 
-    stateful = u.groupBy(*on).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    w = (
-        stateful.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    drained = left.sparkSession.table(name)
-    return drained.select(
-        *on,
-        F.timestamp_micros(F.col("__ts")).alias(left_ts),
-        *[F.col(f"__l_{c}").alias(c) for c in lpayload],
-        F.timestamp_micros(F.col("__mts")).alias(f"{prefix}{right_ts}"),
-        *[F.col(f"__m_{c}").alias(f"{prefix}{c}") for c in right_cols],
+    return _keyed_history(
+        u, on,
+        [
+            (1, {"__ts": None, "__tb": ut["__tb"], **{c: ut[c] for c in rv}}),
+            (0, {"__ts": None, **{c: None for c in lv}}),
+        ],
+        step,
+        out=fields,
+        state=[("ts", "array<long>"), ("tb", f"array<{ut['__tb']}>")]
+        + [(f"v_{c}", f"array<{ut[f'__r_{c}']}>") for c in right_cols],
+        name=name,
+        checkpoint=checkpoint,
     )
 
 
@@ -694,252 +760,96 @@ def stream_asof_join_forward(
     already-emitted answer and are then ignored.
     """
     import numpy as np
-    import pandas as pd
 
     if tolerance_us is None:
         raise ValueError("forward stream as-of requires tolerance_us")
-    on = list(on)
-    right_cols = list(right_cols)
-    ltypes = dict(left.dtypes)
-    rtypes = dict(right.dtypes)
-    lpayload = [c for c in left.columns if c not in on and c != left_ts]
-    tb_type = rtypes[right_tiebreak] if right_tiebreak is not None else "int"
-    tb = F.col(right_tiebreak) if right_tiebreak is not None else F.lit(0)
+    on, right_cols = list(on), list(right_cols)
     tol = int(tolerance_us)
-
-    r_sel = [F.col(c) for c in on] + [
-        F.col(right_ts).cast("timestamp").alias("__et"),
-        F.lit(1).alias("__side"),
-        tb.alias("__tb"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
-        *[F.lit(None).cast(ltypes[c]).alias(f"__l_{c}") for c in lpayload],
-    ]
-    l_sel = [F.col(c) for c in on] + [
-        F.col(left_ts).cast("timestamp").alias("__et"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(tb_type).alias("__tb"),
-        *[F.lit(None).cast(rtypes[c]).alias(f"__r_{c}") for c in right_cols],
-        *[F.col(c).alias(f"__l_{c}") for c in lpayload],
-    ]
-    u = (
-        right.select(*r_sel)
-        .unionByName(left.select(*l_sel))
-        .withWatermark("__et", watermark_delay)
+    u, lpayload, fields = _asof_plan(
+        left, right, on, "__et", lambda c: F.col(c).cast("timestamp"),
+        left_ts, right_ts, right_cols, right_tiebreak, prefix,
     )
-
-    utypes = dict(u.dtypes)
-    key_schema = ", ".join(f"{c} {utypes[c]}" for c in on)
-    out_schema = (
-        key_schema
-        + ", __ts long"
-        + "".join(f", __l_{c} {ltypes[c]}" for c in lpayload)
-        + ", __mts long"
-        + "".join(f", __m_{c} {rtypes[c]}" for c in right_cols)
-    )
-    state_schema = (
-        f"lts array<long>"
-        + "".join(f", l_{c} array<{ltypes[c]}>" for c in lpayload)
-        + f", rts array<long>, rtb array<{tb_type}>"
-        + "".join(f", r_{c} array<{rtypes[c]}>" for c in right_cols)
-    )
+    u = u.withWatermark("__et", watermark_delay)
+    ut = dict(u.dtypes)
+    rv = [f"__r_{c}" for c in right_cols]
+    lv = [f"__l_{c}" for c in lpayload]
     n_l = len(lpayload)
-    out_cols = (
-        on
-        + ["__ts"]
-        + [f"__l_{c}" for c in lpayload]
-        + ["__mts"]
-        + [f"__m_{c}" for c in right_cols]
-    )
 
-    _py = _py_state_values
+    def micros(a):
+        return a.astype("datetime64[us]").astype(np.int64)
 
-    def update(key, pdfs, state: GroupState):
-        # r13 (guide §4.2): per-key body on numpy arrays + lists — the
-        # pandas formulation (state rebuilt into a DataFrame, pd.concat
-        # + sort_values + drop_duplicates per batch, and the same again
-        # on every TIMEOUT sweep) measured ~10 ms per key per trigger
-        # (updateMs 15-20 s + removeMs up to 12 s across 8 partitions,
-        # plans/r13/events_asof_stream_forward_prof_before.txt). Values
-        # flow verbatim; the drained result is bit-identical.
-        lts, lvals = [], {c: [] for c in lpayload}
-        r_ts_l: list = []
-        r_tb: list = []
-        r_v: list = [[] for _ in range(len(right_cols))]
-        if state.exists:
-            st = state.get
-            lts = list(st[0])
-            for i, c in enumerate(lpayload):
-                lvals[c] = list(st[1 + i])
-            r_ts_l = list(st[1 + n_l])
-            r_tb = list(st[2 + n_l])
-            r_v = [list(st[3 + n_l + i]) for i in range(len(right_cols))]
-        r_ts = np.asarray(r_ts_l, dtype=np.int64)
-        if not state.hasTimedOut:
-            added = False
-            for pdf in pdfs:
-                side = pdf["__side"].to_numpy()
-                rmask = side == 1
-                if rmask.any():
-                    added = True
-                    r_ts_l.extend(
-                        pdf["__et"]
-                        .to_numpy()[rmask]
-                        .astype("datetime64[us]")
-                        .astype("int64")
-                        .tolist()
-                    )
-                    r_tb.extend(_py(pdf["__tb"].iloc[rmask], tb_type))
-                    for i, c in enumerate(right_cols):
-                        r_v[i].extend(
-                            _py(pdf[f"__r_{c}"].iloc[rmask], rtypes[c])
-                        )
-                lmask = side == 0
-                if lmask.any():
-                    lts.extend(
-                        pdf["__et"]
-                        .to_numpy()[lmask]
-                        .astype("datetime64[us]")
-                        .astype("int64")
-                        .tolist()
-                    )
-                    for c in lpayload:
-                        lvals[c].extend(_py(pdf[f"__l_{c}"].iloc[lmask], ltypes[c]))
-            if added and r_ts_l:
-                # forward pick = FIRST ts at-or-after, greatest tb among
-                # its ties: stable sort (ts asc, nulls-first tb asc),
-                # collapse per ts keeping the LAST (greatest tb)
-                all_ts = np.asarray(r_ts_l, dtype=np.int64)
-                notnull = np.fromiter(
-                    (v is not None for v in r_tb),
-                    dtype=np.int8,
-                    count=len(r_tb),
-                )
-                try:
-                    tb_key = np.asarray(
-                        [0 if v is None else v for v in r_tb],
-                        dtype=np.float64
-                        if tb_type in ("float", "double")
-                        else np.int64,
-                    )
-                    order = np.lexsort((tb_key, notnull, all_ts))
-                except (TypeError, ValueError, OverflowError):
-                    order = np.asarray(
-                        sorted(
-                            range(len(all_ts)),
-                            key=lambda i: (
-                                all_ts[i],
-                                int(notnull[i]),
-                                r_tb[i] if notnull[i] else 0,
-                            ),
-                        ),
-                        dtype=np.int64,
-                    )
-                sorted_ts = all_ts[order]
-                last = np.empty(len(order), dtype=bool)
-                last[:-1] = sorted_ts[1:] != sorted_ts[:-1]
-                last[-1] = True
-                sel = order[last]
-                r_ts = all_ts[sel]
-                r_ts_l = r_ts.tolist()
-                r_tb = [r_tb[i] for i in sel]
-                r_v = [[col[i] for i in sel] for col in r_v]
+    def step(key, st, got, state):
+        lts, *lvals = st[: 1 + n_l]
+        r_ts, r_tb, *r_v = st[1 + n_l :]
+        r_ts = np.asarray(r_ts, dtype=np.int64)
+        hist, probe = got or (None, None)
+        if probe:
+            lts += micros(probe["__et"]).tolist()
+            lvals = [v + probe[c] for v, c in zip(lvals, lv)]
+        if hist:
+            # forward pick: FIRST ts at-or-after, greatest tb among its ties
+            r_ts = np.concatenate([r_ts, micros(hist["__et"])])
+            r_tb += hist["__tb"]
+            r_v = [col + hist[c] for col, c in zip(r_v, rv)]
+            sel = _latest_per_ts(r_ts, r_tb)
+            r_ts, r_tb = r_ts[sel], [r_tb[i] for i in sel]
+            r_v = [[col[i] for i in sel] for col in r_v]
         wm_us = state.getCurrentWatermarkMs() * 1000
 
         # resolve: emit every pending left whose answer the watermark
-        # has made final. Vectorized — the per-key cost is
-        # O(pending * log rights) in C per batch, so a key that buffers
-        # many lefts across many batches never degenerates into a
-        # Python row loop.
+        # has made final, vectorized — O(pending * log rights) in C
         lts_a = np.asarray(lts, dtype=np.int64)
         pos = np.searchsorted(r_ts, lts_a, "left")
         safe = np.minimum(pos, max(len(r_ts) - 1, 0))
         cand = r_ts[safe] if len(r_ts) else np.zeros(len(lts_a), dtype=np.int64)
         valid = (pos < len(r_ts)) & (cand - lts_a <= tol)
-        emit_match = valid & (cand < wm_us)
-        emit_null = ~valid & (lts_a + tol < wm_us)
-        keep_mask = ~(emit_match | emit_null)
-        keep_idx = np.flatnonzero(keep_mask)
+        matched = valid & (cand < wm_us)
+        done = matched | (~valid & (lts_a + tol < wm_us))
         out = None
-        if len(lts_a) and not keep_mask.all():
-            out_idx = np.flatnonzero(~keep_mask)
-            matched = emit_match[out_idx]
-            mpos = safe[out_idx]
-            data = {}
-            for j, c in enumerate(on):
-                data[c] = [key[j]] * len(out_idx)
-            data["__ts"] = lts_a[out_idx]
-            for c in lpayload:
-                vals = lvals[c]
-                data[f"__l_{c}"] = [vals[i] for i in out_idx]
-            mcand = cand[out_idx]
-            data["__mts"] = [
-                int(t) if m else None for t, m in zip(mcand, matched)
-            ]
-            for i, c in enumerate(right_cols):
-                col = r_v[i]
-                data[f"__m_{c}"] = [
-                    col[p] if m else None for p, m in zip(mpos, matched)
-                ]
-            out = pd.DataFrame(data, columns=out_cols)
-
-        lts = [lts[i] for i in keep_idx]
-        for c in lpayload:
-            vals = lvals[c]
-            lvals[c] = [vals[i] for i in keep_idx]
+        if done.any():
+            idx = np.flatnonzero(done)
+            m, mpos = matched[idx], safe[idx]
+            out = _emit(key, on, {
+                "__ts": lts_a[idx],
+                **{c: [v[i] for i in idx] for v, c in zip(lvals, lv)},
+                "__mts": [int(t) if k else None for t, k in zip(cand[idx], m)],
+                **{
+                    f"__m_{c}": [col[p] if k else None for p, k in zip(mpos, m)]
+                    for col, c in zip(r_v, right_cols)
+                },
+            })
+            keep = np.flatnonzero(~done)
+            lts = [lts[i] for i in keep]
+            lvals = [[v[i] for i in keep] for v in lvals]
         # prune rights: only rows a pending left (ts >= min pending lt)
-        # or a future left (ts >= watermark) could still pick —
-        # r_ts is sorted, so the floor filter is one searchsorted cut
-        if len(r_ts):
-            floor = min([wm_us] + lts) if lts else wm_us
-            cut = int(np.searchsorted(r_ts, floor, "left"))
-            if cut:
-                r_ts_l = r_ts_l[cut:]
-                r_tb = r_tb[cut:]
-                r_v = [col[cut:] for col in r_v]
+        # or a future left (ts >= watermark) could still pick
+        cut = int(np.searchsorted(r_ts, min([wm_us] + lts), "left"))
+        r_ts, r_tb, r_v = r_ts[cut:], r_tb[cut:], [col[cut:] for col in r_v]
 
-        if not lts and not r_ts_l:
-            if state.exists:
-                state.remove()
-        else:
-            state.update(
-                (
-                    lts,
-                    *[lvals[c] for c in lpayload],
-                    r_ts_l,
-                    r_tb,
-                    *r_v,
-                )
-            )
+        if lts or len(r_ts):
+            _save(state, lts, *lvals, r_ts, r_tb, *r_v)
             if lts:
                 # wake when the earliest unresolved window can close
-                nxt = min(
-                    (lt + tol) for lt in lts
-                )
-                state.setTimeoutTimestamp(max(nxt // 1000 + 1, wm_us // 1000 + 1))
-        if out is not None:
-            yield out
+                state.setTimeoutTimestamp(max(min(lts) + tol, wm_us) // 1000 + 1)
+        elif state.exists:
+            state.remove()
+        return out
 
-    stateful = u.groupBy(*on).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    w = (
-        stateful.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    drained = left.sparkSession.table(name)
-    return drained.select(
-        *on,
-        F.timestamp_micros(F.col("__ts")).alias(left_ts),
-        *[F.col(f"__l_{c}").alias(c) for c in lpayload],
-        F.timestamp_micros(F.col("__mts")).alias(f"{prefix}{right_ts}"),
-        *[F.col(f"__m_{c}").alias(f"{prefix}{c}") for c in right_cols],
+    return _keyed_history(
+        u, on,
+        [
+            (1, {"__et": None, "__tb": ut["__tb"], **{c: ut[c] for c in rv}}),
+            (0, {"__et": None, **{c: ut[c] for c in lv}}),
+        ],
+        step,
+        out=fields,
+        state=[("lts", "array<long>")]
+        + [(f"l_{c}", f"array<{ut[f'__l_{c}']}>") for c in lpayload]
+        + [("rts", "array<long>"), ("rtb", f"array<{ut['__tb']}>")]
+        + [(f"r_{c}", f"array<{ut[f'__r_{c}']}>") for c in right_cols],
+        name=name,
+        checkpoint=checkpoint,
+        timeout=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -962,9 +872,6 @@ def stream_check_rules(
     ``unique`` needs a streaming-unsupported distinct aggregation and
     ``foreign_key`` an anti-join pass — both are rejected loudly: run
     them in the batch sweep; the live monitor covers the per-row kinds.
-    In production the same plan runs unbounded and each micro-batch
-    updates the violation counters in place — the freshness/quality
-    dashboard feed.
     """
     from cassandra_diff_spark.operators.validate import (
         _ROW_LOCAL,
@@ -987,16 +894,7 @@ def stream_check_rules(
         F.sum(_violation_cond(r).cast("long")).alias(f"__v{i}")
         for i, r in enumerate(rules)
     ]
-    agg = stream.agg(*aggs)
-    w = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    one = stream.sparkSession.table(name)
-    return one.select(
+    return _drain_table(stream.agg(*aggs), name, checkpoint).select(
         F.explode(
             F.array(
                 *[
@@ -1037,10 +935,8 @@ def stream_quantiles_histogram(
 
     Drained output is deterministic and IDENTICAL to the batch
     :func:`~cassandra_diff_spark.operators.stats.quantiles_histogram`
-    over the same data (oracle-gated). In production the same histogram
-    plan runs unbounded (processingTime trigger, parquet/Delta sink)
-    and the extraction is a trivial batch query over the sink — the
-    p50/p99-dashboard recipe.
+    over the same data (oracle-gated). Unbounded, the extraction is a
+    trivial batch query over the sink — the p50/p99-dashboard recipe.
     """
     from cassandra_diff_spark.operators.stats import (
         _check_args,
@@ -1052,15 +948,9 @@ def stream_quantiles_histogram(
     by = list(by) if by else []
     width = (float(hi) - float(lo)) / int(n_bins)
     hist = histogram_counts(stream, value_col, by, lo, width, n_bins)
-    w = (
-        hist.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
+    return quantiles_from_histogram(
+        _drain_table(hist, name, checkpoint), probs, by=by, lo=lo, width=width
     )
-    _drain(w, checkpoint)
-    drained = stream.sparkSession.table(name)
-    return quantiles_from_histogram(drained, probs, by=by, lo=lo, width=width)
 
 
 def stream_interval_join(
@@ -1079,31 +969,24 @@ def stream_interval_join(
     every INTERVAL stream row (same key) whose ``[start, end]`` (closed)
     contains its timestamp — the streaming twin of
     :func:`~cassandra_diff_spark.operators.temporal.interval_join`
-    (inner), as one ``applyInPandasWithState`` operator over the
-    side-tagged union of the two streams.
+    (inner), with intervals as the kernel's history side.
 
-    Per-key state is the interval history; each micro-batch ingests its
-    intervals FIRST, then matches its points against every interval seen
-    so far — each (point, interval) pair emits exactly once, in the
-    point's batch.
-
-    Ordering contract: micro-batches must arrive event-time-ordered per
-    key with intervals ordered by their START — a point's containing
-    intervals all have ``start <= point_ts``, so under shared time-slice
-    staging they sit in the same or an earlier batch (the same contract,
-    and in the gate the same staged files, as :func:`stream_asof_join`).
+    Each micro-batch ingests its intervals FIRST, then matches its points
+    against every interval seen so far — each (point, interval) pair
+    emits exactly once, in the point's batch. The module's ordering
+    contract applies with intervals ordered by their START: a point's
+    containing intervals all have ``start <= point_ts``, so under shared
+    time-slice staging they sit in the same or an earlier batch.
 
     ``prune_keep_us``: state TTL — intervals whose ``end`` is more than
     this far behind the key's point-time frontier are dropped (they can
     no longer contain any future point under the ordering contract);
     None keeps full history.
 
-    Drains an availableNow trigger into an in-memory table and returns
-    the final frame (interval columns + point columns, like the batch
-    operator's inner output).
+    Returns interval columns + point columns, like the batch operator's
+    inner output.
     """
     import numpy as np
-    import pandas as pd
 
     on = list(on)
     overlap = set(points.columns) & set(intervals.columns) - set(on)
@@ -1112,157 +995,85 @@ def stream_interval_join(
             f"point/interval column name collision: {sorted(overlap)}; "
             f"rename before joining"
         )
-    ptypes = dict(points.dtypes)
-    itypes = dict(intervals.dtypes)
     ipayload = [c for c in intervals.columns if c not in on + [start, end]]
     ppayload = [c for c in points.columns if c not in on + [point_ts]]
 
-    i_sel = [F.col(c) for c in on] + [
-        F.unix_micros(F.col(start).cast("timestamp")).alias("__s"),
-        F.unix_micros(F.col(end).cast("timestamp")).alias("__e"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast("long").alias("__pt"),
-        *[F.col(c).alias(f"__i_{c}") for c in ipayload],
-        *[F.lit(None).cast(ptypes[c]).alias(f"__p_{c}") for c in ppayload],
-    ]
-    p_sel = [F.col(c) for c in on] + [
-        F.lit(None).cast("long").alias("__s"),
-        F.lit(None).cast("long").alias("__e"),
-        F.lit(0).alias("__side"),
-        F.unix_micros(F.col(point_ts).cast("timestamp")).alias("__pt"),
-        *[F.lit(None).cast(itypes[c]).alias(f"__i_{c}") for c in ipayload],
-        *[F.col(c).alias(f"__p_{c}") for c in ppayload],
-    ]
-    u = intervals.select(*i_sel).unionByName(points.select(*p_sel))
+    def micros(c):
+        return F.unix_micros(F.col(c).cast("timestamp"))
 
-    utypes = dict(u.dtypes)
-    key_schema = ", ".join(f"{c} {utypes[c]}" for c in on)
-    out_schema = (
-        key_schema
-        + ", __s long, __e long"
-        + "".join(f", __i_{c} {itypes[c]}" for c in ipayload)
-        + ", __pt long"
-        + "".join(f", __p_{c} {ptypes[c]}" for c in ppayload)
-    )
-    state_schema = "s array<long>, e array<long>, hwm long" + "".join(
-        f", i_{c} array<{itypes[c]}>" for c in ipayload
-    )
-    out_cols = (
-        on
-        + ["__s", "__e"]
-        + [f"__i_{c}" for c in ipayload]
-        + ["__pt"]
-        + [f"__p_{c}" for c in ppayload]
-    )
+    u = _side_union(intervals, points, on, [
+        ("__s", micros(start), None),
+        ("__e", micros(end), None),
+        ("__side", F.lit(1), F.lit(0)),
+        ("__pt", None, micros(point_ts)),
+        *[(f"__i_{c}", F.col(c), None) for c in ipayload],
+        *[(f"__p_{c}", None, F.col(c)) for c in ppayload],
+    ])
+    ut = dict(u.dtypes)
+    iv = [f"__i_{c}" for c in ipayload]
+    pv = [f"__p_{c}" for c in ppayload]
 
-    def update(key, pdfs, state: GroupState):
-        s_l, e_l, hwm = [], [], None
-        ivals = {c: [] for c in ipayload}
-        if state.exists:
-            st = state.get
-            s_l, e_l, hwm = list(st[0]), list(st[1]), st[2]
-            for i, c in enumerate(ipayload):
-                ivals[c] = list(st[3 + i])
-        pt_parts, p_pay_parts = [], {c: [] for c in ppayload}
-        added = False
-        for pdf in pdfs:
-            # r13 (guide §4.2): mask with numpy instead of slicing
-            # per-side pandas sub-frames; point chunks accumulate as
-            # arrays, not DataFrames — the per-key pandas construction
-            # was the measured addBatch floor (see the asof twins)
-            side = pdf["__side"].to_numpy()
-            imask = side == 1
-            if imask.any():
-                added = True
-                s_l.extend(pdf["__s"].to_numpy()[imask].astype(np.int64).tolist())
-                e_l.extend(pdf["__e"].to_numpy()[imask].astype(np.int64).tolist())
-                for c in ipayload:
-                    # exact Python values, not the union frame's float64:
-                    # a float stored into an integer state slot NULLs
-                    # silently (see _py_state_values)
-                    ivals[c].extend(
-                        _py_state_values(pdf[f"__i_{c}"].iloc[imask], itypes[c])
-                    )
-            pmask = side == 0
-            if pmask.any():
-                pt_parts.append(
-                    pdf["__pt"].to_numpy()[pmask].astype(np.int64)
-                )
-                for c in ppayload:
-                    p_pay_parts[c].append(pdf[f"__p_{c}"].to_numpy()[pmask])
+    def step(key, st, got, state):
+        hist, probe = got
+        s_l, e_l, hwm, *ivals = st
+        if hist:
+            s_l += hist["__s"]
+            e_l += hist["__e"]
+            ivals = [v + hist[c] for v, c in zip(ivals, iv)]
         out = None
-        if pt_parts:
-            pt_all = np.concatenate(pt_parts)
-            hwm = max(int(pt_all.max()), hwm if hwm is not None else -(2**62))
+        if probe:
+            pt = probe["__pt"].astype(np.int64)
+            hwm = max(int(pt.max()), hwm if hwm is not None else -(2**62))
             if s_l:
-                # Vectorized containment resolve (same treatment the forward
-                # as-of resolve got): broadcast-compare the point vector
-                # against the interval bound arrays, one np.nonzero for all
-                # (point, interval) hits — no per-row Python loop. The
-                # point axis is CHUNKED so the dense hit matrix stays
-                # bounded (~128 MB at 1M retained intervals) instead of
-                # growing O(points x intervals) with the micro-batch.
+                # broadcast-compare the point vector against the interval
+                # bounds, one np.nonzero for all (point, interval) hits;
+                # the point axis is CHUNKED so the dense hit matrix stays
+                # bounded (~128 MB at 1M retained intervals)
                 s_a = np.asarray(s_l, dtype=np.int64)
                 e_a = np.asarray(e_l, dtype=np.int64)
-                pt_a = pt_all
-                pt_chunk = max(1, (1 << 27) // max(1, len(s_a)))
+                pt_chunk = max(1, (1 << 27) // len(s_a))
                 pis, iis = [], []
-                for c0 in range(0, len(pt_a), pt_chunk):
-                    pc = pt_a[c0 : c0 + pt_chunk]
-                    hit = (s_a[None, :] <= pc[:, None]) & (
-                        e_a[None, :] >= pc[:, None]
-                    )
-                    cpi, cii = np.nonzero(hit)
+                for c0 in range(0, len(pt), pt_chunk):
+                    pc = pt[c0 : c0 + pt_chunk, None]
+                    cpi, cii = np.nonzero((s_a[None, :] <= pc) & (e_a[None, :] >= pc))
                     pis.append(cpi + c0)
                     iis.append(cii)
-                pi = np.concatenate(pis) if pis else np.empty(0, np.int64)
-                ii = np.concatenate(iis) if iis else np.empty(0, np.int64)
+                pi, ii = np.concatenate(pis), np.concatenate(iis)
                 if len(pi):
-                    data = {c: [key[k]] * len(pi) for k, c in enumerate(on)}
-                    data["__s"] = s_a[ii]
-                    data["__e"] = e_a[ii]
-                    for c in ipayload:
-                        col = ivals[c]
-                        data[f"__i_{c}"] = [col[i] for i in ii]
-                    data["__pt"] = pt_a[pi]
-                    for c in ppayload:
-                        data[f"__p_{c}"] = np.concatenate(p_pay_parts[c])[pi]
-                    out = pd.DataFrame(data, columns=out_cols)
+                    out = _emit(key, on, {
+                        "__s": s_a[ii],
+                        "__e": e_a[ii],
+                        **{c: [v[i] for i in ii] for v, c in zip(ivals, iv)},
+                        "__pt": pt[pi],
+                        **{c: probe[c][pi] for c in pv},
+                    })
         if prune_keep_us is not None and hwm is not None and s_l:
             floor = hwm - int(prune_keep_us)
             keep = [i for i, e in enumerate(e_l) if e >= floor]
             if len(keep) < len(s_l):
                 s_l = [s_l[i] for i in keep]
                 e_l = [e_l[i] for i in keep]
-                for c in ipayload:
-                    ivals[c] = [ivals[c][i] for i in keep]
-        if added or pt_parts:
-            state.update((s_l, e_l, hwm, *[ivals[c] for c in ipayload]))
-        if out is not None:
-            yield out
+                ivals = [[v[i] for i in keep] for v in ivals]
+        if hist or probe:
+            _save(state, s_l, e_l, hwm, *ivals)
+        return out
 
-    stateful = u.groupBy(*on).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    w = (
-        stateful.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    drained = points.sparkSession.table(name)
-    return drained.select(
-        *on,
-        F.timestamp_micros(F.col("__s")).alias(start),
-        F.timestamp_micros(F.col("__e")).alias(end),
-        *[F.col(f"__i_{c}").alias(c) for c in ipayload],
-        F.timestamp_micros(F.col("__pt")).alias(point_ts),
-        *[F.col(f"__p_{c}").alias(c) for c in ppayload],
+    return _keyed_history(
+        u, on,
+        [
+            (1, {"__s": "bigint", "__e": "bigint", **{c: ut[c] for c in iv}}),
+            (0, {"__pt": None, **{c: None for c in pv}}),
+        ],
+        step,
+        out=[(c, ut[c], c) for c in on]
+        + [("__s", _MICROS, start), ("__e", _MICROS, end)]
+        + [(f"__i_{c}", ut[f"__i_{c}"], c) for c in ipayload]
+        + [("__pt", _MICROS, point_ts)]
+        + [(f"__p_{c}", ut[f"__p_{c}"], c) for c in ppayload],
+        state=[("s", "array<long>"), ("e", "array<long>"), ("hwm", "long")]
+        + [(f"i_{c}", f"array<{ut[f'__i_{c}']}>") for c in ipayload],
+        name=name,
+        checkpoint=checkpoint,
     )
 
 
@@ -1282,17 +1093,12 @@ def stream_latest_state(
     state is ONE struct per live key (the greatest-(ts, seq) version),
     map-side-combined within every micro-batch, in COMPLETE output mode.
 
-    Drains an availableNow trigger into an in-memory table and returns
-    the final state frame — deterministic and identical to the batch
+    The drained state frame is deterministic and identical to the batch
     operator over the same rows (the gate asserts this against the
     window-formulation SQL oracle). The delete filter applies on the
     drained frame: tombstoned keys hold their (tiny) tombstone struct in
     state rather than vanishing, which is what lets a later upsert
-    resurrect the key with correct ordering. In production the same
-    plan runs unbounded with a processingTime trigger into a
-    Delta/parquet sink serving point lookups."""
-    from pyspark.sql import functions as F
-
+    resurrect the key with correct ordering."""
     keys = list(keys)
     payload_cols = [c for c in stream.columns if c not in keys]
     if seq_col is None:
@@ -1304,14 +1110,7 @@ def stream_latest_state(
             F.struct(*[F.col(c) for c in payload_cols]), ver
         ).alias("__v")
     )
-    w = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    drained = stream.sparkSession.table(name)
+    drained = _drain_table(agg, name, checkpoint)
     out = drained.select(
         *keys, *[F.col(f"__v.{c}").alias(c) for c in payload_cols]
     )
@@ -1350,66 +1149,35 @@ def stream_rolling_anomaly(
 
     State per key: ONE array of the last ``window`` quantized values
     (nulls included for slot fidelity) — bounded, tiny, no TTL needed.
-    Ordering contract (same as :func:`stream_asof_join`): rows are
-    ordered by ``(ts, *order_cols)`` within each micro-batch by the
-    operator, and batches must arrive in event-time order per key (file
-    streams staged time-sliced satisfy this); out-of-order arrival
-    ACROSS batches evaluates against the already-shipped window, which
-    a real-time monitor inherently accepts.
+    Rows are ordered by ``(ts, *order_cols)`` within each micro-batch;
+    across batches the module's ordering contract applies, and
+    out-of-order arrival evaluates against the already-shipped window,
+    which a real-time monitor inherently accepts.
 
-    Drains an availableNow trigger into an in-memory table; production
-    runs the same plan unbounded with a real sink.
-
-    Cost shape: the per-batch kernel is vectorized (exact int64 prefix
-    sums over [carry-in | batch]); wall-clock is dominated by the
-    streaming runtime itself — applyInPandasWithState invokes once per
-    (key, micro-batch), so many tiny key groups cost invocation
-    overhead, not kernel time. On a real cluster those invocations
-    spread across executors; batch :func:`~cassandra_diff_spark.
-    operators.stats.rolling_anomaly` remains the backfill path.
+    Cost shape: the per-batch step is vectorized (exact int64 prefix
+    sums over [carry-in | batch]); wall-clock is the streaming runtime's
+    once-per-(key, micro-batch) invocation overhead, not step time. The
+    batch :func:`~cassandra_diff_spark.operators.stats.rolling_anomaly`
+    remains the backfill path.
     """
-    import math
-
-    import pandas as pd
+    import numpy as np
 
     lo_n = max(int(min_periods), 2)
     w_n, z2, sc = int(window), int(z_int) * int(z_int), int(scale)
     types = dict(events.dtypes)
-    out_schema = ", ".join(
-        [f"`{key_col}` {types[key_col]}", f"`{ts_col}` {types[ts_col]}"]
-        + [f"`{c}` {types[c]}" for c in order_cols]
-        + ["value_c bigint", "n_prev bigint", "mean_c1000 bigint"]
-    )
+    shown = (ts_col, *order_cols)
 
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        buf = list(state.get[0]) if state.exists else []
+    def step(key, st, got, state):
+        (rows,) = got
+        buf = st[0]
         out = None
-        # concat BEFORE sorting: a group's batch rows can span multiple
-        # Arrow chunks with no cross-chunk order guarantee — the
-        # carry-buffer kernel is order-sensitive, so per-chunk sorting
-        # would mis-window keys exceeding maxRecordsPerBatch rows in one
-        # batch (same fix as stream_transitions)
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            pdf = (
-                pd.concat(frames, ignore_index=True)
-                if len(frames) > 1
-                else frames[0]
-            )
-            # stable ts-major sort via one lexsort (r13, guide §4.2 —
-            # the per-key pandas sort + row-at-a-time quantization loop
-            # was this operator's Python floor)
-            # lexsort: LAST key is primary, so feed (least..most
-            # significant) = reversed order_cols, then ts
-            keys = [pdf[c].to_numpy() for c in (*reversed(order_cols), ts_col)]
-            order = np.lexsort(tuple(keys))
+        if rows:
+            order = _stable_order(*[rows[c] for c in shown])
             # vectorized HALF_UP-on-ties quantization, bit-equal to the
             # scalar form: v*sc floored; an EXACT .5 tie goes away from
             # zero (Spark round); everything else is round-half-even
             # (Python round == np.rint on float64)
-            v = pdf[value_col].to_numpy(dtype=np.float64)[order] * sc
+            v = rows[value_col].astype(np.float64)[order] * sc
             nullmask = np.isnan(v)
             v0 = np.where(nullmask, 0.0, v)
             tie = np.abs(v0 - np.floor(v0)) == 0.5
@@ -1441,64 +1209,32 @@ def stream_rolling_anomaly(
             with np.errstate(over="ignore"):
                 lhs = (x * n - s) ** 2 * (n - 1)
                 rhs = z2 * (q2 * n - s * s) * n
-            flag = (valid[m:] == 1) & (n >= lo_n) & (lhs > rhs)
-            hit = np.nonzero(flag)[0]
+            hit = np.nonzero((valid[m:] == 1) & (n >= lo_n) & (lhs > rhs))[0]
             if len(hit):
                 src = order[hit]
-                data = {
-                    c: pdf[c].to_numpy()[src]
-                    for c in (key_col, ts_col, *order_cols)
-                }
-                data["value_c"] = x[hit]
-                data["n_prev"] = n[hit]
-                # same float sequence as the scalar math.floor(1000.0*s/n)
-                data["mean_c1000"] = np.floor(
-                    (1000.0 * s[hit]) / n[hit]
-                ).astype(np.int64)
-                out = pd.DataFrame(
-                    data,
-                    columns=[
-                        key_col, ts_col, *order_cols,
-                        "value_c", "n_prev", "mean_c1000",
-                    ],
-                )
-            comb_v = vals[-w_n:] if len(vals) > w_n else vals
-            comb_ok = valid[-w_n:] if len(valid) > w_n else valid
-            buf = [
-                int(cv) if ok else None for cv, ok in zip(comb_v, comb_ok)
-            ]
-        state.update((buf,))
-        if out is not None:
-            yield out
+                out = _emit(key, [key_col], {
+                    **{c: rows[c][src] for c in shown},
+                    "value_c": x[hit],
+                    "n_prev": n[hit],
+                    # same float sequence as the scalar math.floor(1000.0*s/n)
+                    "mean_c1000": np.floor((1000.0 * s[hit]) / n[hit]).astype(np.int64),
+                })
+            buf = [int(cv) if ok else None for cv, ok in zip(vals[-w_n:], valid[-w_n:])]
+        _save(state, buf)
+        return out
 
-    flagged = events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="buf array<bigint>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_history(
+        events.select(*dict.fromkeys((key_col, *shown, value_col))),
+        [key_col],
+        [(None, {c: None for c in (*shown, value_col)})],
+        step,
+        out=[(c, types[c]) for c in (key_col, *shown)]
+        + [("value_c", "bigint"), ("n_prev", "bigint"), ("mean_c1000", "bigint")],
+        state=[("buf", "array<bigint>")],
+        name=name,
+        checkpoint=checkpoint,
+        mode="update",
     )
-    w = (
-        flagged.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    return events.sparkSession.table(name)
-
-
-def _drain_complete(agg: DataFrame, name: str, checkpoint: "str | None" = None) -> DataFrame:
-    """availableNow complete-mode drain into an in-memory table — the
-    shared tail of the bounded-state streaming aggregations."""
-    w = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    return agg.sparkSession.table(name)
 
 
 def stream_cm_sketch(
@@ -1522,7 +1258,7 @@ def stream_cm_sketch(
     from cassandra_diff_spark.operators.sketch import cm_sketch_build
 
     agg = cm_sketch_build(stream, col, depth=depth, width=width, seed=seed)
-    return _drain_complete(agg, name, checkpoint)
+    return _drain_table(agg, name, checkpoint)
 
 
 def stream_calibration_bins(
@@ -1551,7 +1287,7 @@ def stream_calibration_bins(
     agg = calibration_bins(
         stream, score_col, label_col, n_bins=n_bins, lo=lo, hi=hi
     )
-    return _drain_complete(agg, name, checkpoint)
+    return _drain_table(agg, name, checkpoint)
 
 
 def stream_decayed_count_state(
@@ -1616,7 +1352,7 @@ def stream_decayed_count_state(
         .groupBy("group", "shift")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    drained = _drain_complete(g, name, checkpoint)
+    drained = _drain_table(g, name, checkpoint)
     return drained.select(
         "group",
         F.lit(eb).cast("long").alias("epoch_bucket"),
@@ -1644,7 +1380,7 @@ def stream_bloom_build(
     from cassandra_diff_spark.operators.sketch import bloom_build
 
     agg = bloom_build(stream, col, m_bits=m_bits, k=k, seed=seed)
-    return _drain_complete(agg, name, checkpoint)
+    return _drain_table(agg, name, checkpoint)
 
 
 def stream_majority_label(
@@ -1661,11 +1397,7 @@ def stream_majority_label(
     resolution runs on the DRAINED count table through the SAME
     ``majority_from_counts`` tail as the batch operator, so drained
     output equals :func:`~cassandra_diff_spark.operators.evaluate.
-    majority_label` over the same data by construction (oracle-gated).
-
-    In production the count aggregation runs unbounded and the
-    resolution is a trivial batch query over the sink — labels firm up
-    as votes arrive."""
+    majority_label` over the same data by construction (oracle-gated)."""
     from cassandra_diff_spark.operators.evaluate import majority_from_counts
 
     g = (
@@ -1676,7 +1408,7 @@ def stream_majority_label(
         .groupBy("item", "__label")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    return majority_from_counts(_drain_complete(g, name, checkpoint))
+    return majority_from_counts(_drain_table(g, name, checkpoint))
 
 
 def stream_contamination(
@@ -1724,7 +1456,7 @@ def stream_contamination(
             F.sum(hit).cast("long").alias("n_overlap"),
         )
     )
-    drained = _drain_complete(agg, name, checkpoint)
+    drained = _drain_table(agg, name, checkpoint)
     return drained.select(
         "id",
         "n_grams",
@@ -1755,7 +1487,7 @@ def stream_token_counts(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return _drain_complete(agg, name, checkpoint)
+    return _drain_table(agg, name, checkpoint)
 
 
 def stream_class_metrics(
@@ -1784,7 +1516,7 @@ def stream_class_metrics(
         .groupBy("truth", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return class_metrics_from_cells(_drain_complete(cells, name, checkpoint))
+    return class_metrics_from_cells(_drain_table(cells, name, checkpoint))
 
 
 def stream_transitions(
@@ -1808,76 +1540,43 @@ def stream_transitions(
     tiebreak)`` — the same total order the batch window uses — chains
     them onto the carried label, and yields one (from_label, to_label)
     row per adjacent pair. Drained bigrams therefore equal the batch
-    operator's pre-aggregation pairs; the caller aggregates counts/ppm
-    on the drained frame and shares the batch oracle.
+    operator's pre-aggregation pairs under the module's ordering
+    contract; the caller aggregates counts/ppm on the drained frame and
+    shares the batch oracle.
 
-    Ordering contract (same as :func:`stream_rolling_anomaly`): batches
-    arrive event-time-ordered per key (time-sliced file staging).
-    Bounded state: one label per key, no TTL needed.
-
-    Integer label columns with any nulls arrive float64 from pandas;
-    labels are restored to exact Python values via ``_py_state_values``
-    before chaining/state (labels beyond 2^53 would lose bits at the
-    Arrow->pandas boundary itself — a pandas-interchange limit shared
-    by every ``applyInPandasWithState`` operator, pinned in tests).
+    Labels bank as exact Python values (integer labels with nulls arrive
+    float64 from pandas); labels beyond 2^53 would still lose bits at the
+    Arrow->pandas boundary itself — a pandas-interchange limit shared by
+    every ``applyInPandasWithState`` operator, pinned in tests.
     """
     import pandas as pd
 
-    types = dict(events.dtypes)
-    lab_t = types[label_col]
-    out_schema = f"from_label {lab_t}, to_label {lab_t}"
-    state_schema = f"seen boolean, last {lab_t}"
+    lab_t = dict(events.dtypes)[label_col]
 
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        seen, last = (state.get if state.exists else (False, None))
-        # concat BEFORE sorting: a group's micro-batch rows can span
-        # multiple Arrow chunks with no cross-chunk order guarantee —
-        # sorting per chunk would mis-order transitions for keys with
-        # >maxRecordsPerBatch rows in one batch.
-        # r13 (guide §4.2): sort with one stable np.lexsort over the
-        # (ts, tiebreak) arrays instead of pd.concat + sort_values per
-        # key — the per-key pandas construction was the measured
-        # addBatch floor of this operator family.
-        ts_parts, tb_parts, lab_parts = [], [], []
-        for pdf in pdfs:
-            if len(pdf):
-                ts_parts.append(pdf[ts_col].to_numpy())
-                tb_parts.append(pdf[tiebreak_col].to_numpy())
-                lab_parts.append(pdf[label_col])
+    def step(key, st, got, state):
+        seen, last = st
+        seen = bool(seen)
+        (rows,) = got
         frm, to = [], []
-        if ts_parts:
-            ts_a = np.concatenate(ts_parts)
-            tb_a = np.concatenate(tb_parts)
-            order = np.lexsort((tb_a, ts_a))  # stable, ts-major
-            labs = _py_state_values(pd.concat(lab_parts), lab_t)
-            for i in order:
-                lab = labs[i]
+        if rows:
+            labs = rows[label_col]
+            for i in _stable_order(rows[ts_col], rows[tiebreak_col]):
                 if seen:
                     frm.append(last)
-                    to.append(lab)
-                seen, last = True, lab
-        state.update((seen, last))
+                    to.append(labs[i])
+                seen, last = True, labs[i]
+        _save(state, seen, last)
         if frm:
-            yield pd.DataFrame(
-                {"from_label": frm, "to_label": to}, dtype=object
-            )
+            return pd.DataFrame({"from_label": frm, "to_label": to}, dtype=object)
+        return None
 
-    stateful = events.select(
-        key_col, ts_col, tiebreak_col, label_col
-    ).groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_history(
+        events.select(key_col, ts_col, tiebreak_col, label_col),
+        [key_col],
+        [(None, {ts_col: None, tiebreak_col: None, label_col: lab_t})],
+        step,
+        out=[("from_label", lab_t), ("to_label", lab_t)],
+        state=[("seen", "boolean"), ("last", lab_t)],
+        name=name,
+        checkpoint=checkpoint,
     )
-    w = (
-        stateful.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    return events.sparkSession.table(name)

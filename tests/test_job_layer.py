@@ -792,6 +792,29 @@ class TestSnapshotDrift:
         assert out["source"]["dirty_buckets"] == 0  # same source both runs
         assert out["target"]["dirty_buckets"] > 0  # tgt drifted vs src
 
+    def test_chunked_job_writes_no_partial_snapshot(self, spark, pair_dirs, tmp_path):
+        """A chunk's bucket digests are not a table snapshot: a 2-chunk
+        job must not append one partial snapshot per chunk, which
+        drift_report would then read as the table's."""
+        import os
+
+        from cassandra_diff_spark.job import snapshot_dir
+
+        src_dir, tgt_dir = pair_dirs
+        snap = str(tmp_path / "snaps_chunked")
+        extra = f"digest_buckets: 16\n        snapshot_path: {snap}"
+        cfg = make_cfg(src_dir, tgt_dir, str(tmp_path / "jch"),
+                       job_id="chunked", extra=extra)
+        run_job(spark, cfg, mid_split_chunks=2)
+        path = snapshot_dir(snap, "orders")
+        if os.path.isdir(path):
+            twice = (
+                spark.read.parquet(path)
+                .groupBy("snapshot_id", "bucket").count()
+                .filter("count > 1").count()
+            )
+            assert twice == 0
+
     def test_drift_report_requires_config(self, spark, pair_dirs, tmp_path):
         from cassandra_diff_spark.job import table_drift_report
 

@@ -524,11 +524,24 @@ def test_stream_asof_strict_excludes_equal_ts(spark, tmp_path):
     assert run(True, "t_sa_strict").r_v == 5.0      # strict falls back
 
 
-@pytest.mark.parametrize("n_slices", [1, 7])
-def test_stream_asof_random_slicing_matches_batch(spark, tmp_path, n_slices):
+@pytest.mark.parametrize(
+    "n_slices, v_type, tb_type",
+    [
+        pytest.param(1, "double", "long", id="1"),
+        pytest.param(7, "double", "long", id="7"),
+        # integer right values banked into state across batches
+        pytest.param(7, "bigint", "long", id="7-bigint-v"),
+        # a tiebreak with no numeric form takes the tuple-sort path
+        pytest.param(7, "double", "string", id="7-string-tiebreak"),
+    ],
+)
+def test_stream_asof_random_slicing_matches_batch(
+    spark, tmp_path, n_slices, v_type, tb_type
+):
     """The drained result is invariant to HOW the time axis is sliced
     into micro-batches (1 slice = everything in one batch; 7 = most
-    matches cross batch boundaries), always equal to the batch asof."""
+    matches cross batch boundaries), always equal to the batch asof —
+    whatever the right value's and the tiebreak's types."""
     import random
     from datetime import datetime, timedelta
 
@@ -542,12 +555,17 @@ def test_stream_asof_random_slicing_matches_batch(spark, tmp_path, n_slices):
         (rnd.randrange(4), t0 + rnd.randrange(1000) * us, i)
         for i in range(80)
     ]
+    to_v = float if v_type == "double" else int
+    # "r10" sorts before "r9": string order, not numeric order
+    to_tb = (lambda i: f"r{i}") if tb_type == "string" else int
     rrows = [
-        (rnd.randrange(5), t0 + rnd.randrange(1000) * us, i, float(rnd.randrange(50)))
+        (rnd.randrange(5), t0 + rnd.randrange(1000) * us, to_tb(i), to_v(rnd.randrange(50)))
         for i in range(90)
     ]
     left = spark.createDataFrame(lrows, "k long, ts timestamp, lid long")
-    right = spark.createDataFrame(rrows, "k long, ts timestamp, rid long, v double")
+    right = spark.createDataFrame(
+        rrows, f"k long, ts timestamp, rid {tb_type}, v {v_type}"
+    )
     bounds = [t0 + (1000 * i // n_slices) * us for i in range(n_slices)] + [
         t0 + 1001 * us
     ]
@@ -564,7 +582,7 @@ def test_stream_asof_random_slicing_matches_batch(spark, tmp_path, n_slices):
         ["k"],
         right_cols=["v"],
         right_tiebreak="rid",
-        name=f"t_sa_rand_{n_slices}",
+        name=f"t_sa_rand_{n_slices}_{v_type}_{tb_type}",
     )
     want = asof_join(
         left, right, ["k"], right_cols=["v"], right_tiebreak="rid"
