@@ -81,10 +81,7 @@ def _ordered(merged: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged = gate_pipeline.ensure_stream_wrapped(
-        {**gate.QUERIES, **gate_pipeline.QUERIES}
-    )
-    return _ordered(merged)
+    return _ordered({**gate.QUERIES, **gate_pipeline.QUERIES})
 
 
 def oracle_sql() -> dict[str, str]:

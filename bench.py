@@ -20,9 +20,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from cassandra_diff_spark import gate, gate_pipeline  # noqa: E402
 from cassandra_diff_spark.session import get_spark  # noqa: E402
 
-ALL_QUERIES = gate_pipeline.ensure_stream_wrapped(
-    {**gate.QUERIES, **gate_pipeline.QUERIES}
-)
+ALL_QUERIES = {**gate.QUERIES, **gate_pipeline.QUERIES}
 
 HEADLINE = [
     "diff_stats_orders",
@@ -284,6 +282,24 @@ def machine_health() -> dict:
     return {"spin_ms": spin_ms, "load1": load1, "steal_pct": steal_pct}
 
 
+def bench_result(
+    timings: dict, errors: dict, sf: float, health_launch: dict, health_end: dict
+) -> dict:
+    """The bench's result dict: the headline total over the timed queries,
+    plus the machine-health probes taken at launch and at the end."""
+    out = {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "machine": {"launch": health_launch, "end": health_end},
+    }
+    if errors:
+        out["errors"] = errors
+    return out
+
+
 def _time_query(spark, fn, sf_dir, reps=N_REPS):
     """Median-of-reps timing of one gate callable; each rep re-executes
     the full query (build + count) and releases operator caches after,
@@ -391,18 +407,8 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    total = round(sum(timings.values()), 3)
-    health = {"launch": health_launch, "end": machine_health()}
-    out = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "machine": health,
-    }
-    if errors:
-        out["errors"] = errors
+    out = bench_result(timings, errors, sf, health_launch, machine_health())
+    total, health = out["value"], out["machine"]
 
     # 1M-vector scale probe of the ANN / near-dup paths: planted-neighbor
     # recall + candidate-set fraction at scale-tuned banding (the evidence

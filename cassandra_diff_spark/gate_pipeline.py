@@ -45,7 +45,7 @@ from cassandra_diff_spark.operators.dedup import (
     SIMHASH_BITS,
     XMOD,
 )
-from cassandra_diff_spark.gate import load
+from cassandra_diff_spark.gate import _stream_session, load
 
 
 def _docs(spark, sf_dir, *, spread=None):
@@ -1624,6 +1624,7 @@ def _q_dedup_minhash_stream(spark, sf_dir):
     the growing signature index seeded with the corpus docs' signatures.
     The drained decision table equals the one-shot incremental run minus
     the dup_in label — same DuckDB oracle, without that column."""
+    spark = _stream_session(spark)
     import glob
     import os
     import shutil
@@ -2328,6 +2329,7 @@ def _q_cdc_latest_state_stream(spark, sf_dir):
     batch operator's — gated by the SAME window-formulation oracle. The
     max_by version order is batching-independent, so the multi-batch
     drain is deterministic."""
+    spark = _stream_session(spark)
     import shutil
 
     from cassandra_diff_spark.streaming.diff_stream import stream_latest_state
@@ -2872,6 +2874,7 @@ def _q_events_asof_stream(spark, sf_dir):
     stream_asof_join. The drained result equals the batch asof_join, so
     the SAME LATERAL oracle gates the streaming runtime, tiebreak
     contract included."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.streaming.diff_stream import stream_asof_join
 
     stage = _stage_event_stream_slices(spark, sf_dir)
@@ -2930,6 +2933,7 @@ def _q_events_asof_stream_forward(spark, sf_dir):
     prescribes) so the closing watermark resolves every left row; the
     drained result then equals the batch asof_join(direction='forward',
     tolerance) and the same LATERAL oracle gates it."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.streaming.diff_stream import stream_asof_join_forward
 
     stage = _stage_event_stream_slices(spark, sf_dir, heartbeat_days=10)
@@ -3313,6 +3317,7 @@ def _q_events_interval_stream(spark, sf_dir):
     points; every (click inside window) pair emits exactly once. The
     oracle is the plain inequality join — the batch semantics the
     stateful operator must reproduce across micro-batch boundaries."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.streaming.diff_stream import stream_interval_join
 
     stage = _stage_event_stream_slices(spark, sf_dir)
@@ -3704,6 +3709,7 @@ def _q_events_sessions_stream(spark, sf_dir):
     >= g breaks) while the batch breaks at gap > g, so the stream gap is
     g + 1 microsecond — identical semantics on integer-microsecond
     timestamps."""
+    spark = _stream_session(spark)
     stage = _fx_sessions_stream(spark, sf_dir)
     stream = (
         spark.readStream.schema("user_id bigint, ts timestamp, event_id bigint")
@@ -4048,6 +4054,7 @@ def _q_events_quantiles_binned_stream(spark, sf_dir):
     volume); quantile extraction runs on the drained histogram. Counts
     are order-independent, so the multi-batch drain is deterministic
     and the SAME bit-for-bit oracle gates it."""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.gate import load_events
@@ -4459,6 +4466,7 @@ def _q_validate_orders_stream(spark, sf_dir):
     row-local subset of the batch oracle. (unique / foreign_key need
     distinct/anti-join plans the streaming runtime can't express; the
     operator rejects them, the batch sweep covers them.)"""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.operators import validate as V
@@ -5005,6 +5013,7 @@ def _q_events_hop_counts_stream(spark, sf_dir):
     live window set; counts are order-independent so the drain is
     batching-deterministic) — same integer epoch-grid oracle as the
     batch gate."""
+    spark = _stream_session(spark)
     import shutil
 
     from cassandra_diff_spark.gate import load_events
@@ -6787,6 +6796,7 @@ def _q_events_rolling_anomaly_stream(spark, sf_dir):
     its key's bounded window state THE MOMENT it arrives. Drained flags
     equal the batch operator, so the SAME oracle gates the streaming
     runtime."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.streaming.diff_stream import (
         stream_rolling_anomaly,
     )
@@ -6816,6 +6826,7 @@ def _q_sketch_cm_stream(spark, sf_dir):
     micro-batches into the complete-mode CM aggregation (state bounded
     by the matrix), the drained cells feed the SAME estimate lookup, and
     the SAME oracle replays the arithmetic bit-for-bit."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.gate import load_events
     from cassandra_diff_spark.operators.sketch import cm_estimate
     from cassandra_diff_spark.streaming.diff_stream import stream_cm_sketch
@@ -6862,6 +6873,7 @@ def _q_bloom_stream_prefilter(spark, sf_dir):
     map-only orders prefilter — drained bitset == batch build, so the
     batch gate's oracle (false positives included) gates the streaming
     runtime."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.operators.sketch import bloom_filter_keys
     from cassandra_diff_spark.streaming.diff_stream import stream_bloom_build
 
@@ -8429,6 +8441,7 @@ def _q_eval_majority_label_stream(spark, sf_dir):
     (item, label) count aggregation; winner resolution runs on the
     drained counts via the SAME majority_from_counts tail — gated by
     the batch window oracle."""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.streaming.diff_stream import stream_majority_label
@@ -8473,6 +8486,7 @@ def _q_curate_contamination_stream(spark, sf_dir):
     streams in file-sized micro-batches; each doc's shingles meet the
     STATIC broadcast benchmark index (map-only) and the per-doc overlap
     counters aggregate complete-mode. Shares the batch oracle."""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.operators.dedup import shingle_set
@@ -8828,6 +8842,7 @@ def _q_vocab_js_drift_stream(spark, sf_dir):
     streams in file-sized micro-batches through the complete-mode
     token-count aggregation; the drained counts meet the persisted
     even-half baseline in js_divergence — gated by the batch oracle."""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.operators.vocab import js_divergence, token_counts
@@ -9140,6 +9155,7 @@ def _q_eval_class_metrics_stream(spark, sf_dir):
     confusion-cell aggregation; per-class resolution runs on the
     drained cells via the SAME class_metrics_from_cells tail — gated by
     the batch oracle."""
+    spark = _stream_session(spark)
     import pathlib
 
     from cassandra_diff_spark.streaming.diff_stream import stream_class_metrics
@@ -9915,6 +9931,7 @@ def _q_events_transition_stream(spark, sf_dir):
     moment it lands. The drained bigram multiset equals the batch
     lead-window's pairs by construction, so after the same count + ppm
     aggregation the BATCH oracle gates the streaming runtime."""
+    spark = _stream_session(spark)
     from pyspark.sql.window import Window as _W
 
     from cassandra_diff_spark.streaming.diff_stream import stream_transitions
@@ -10286,6 +10303,7 @@ def _q_events_decayed_counts_stream(spark, sf_dir):
     max(ts) bucket — a stream cannot know its own horizon, so the epoch
     is the operator's explicit contract (computed here from the staged
     events in one scalar job)."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.gate import load_events
     from cassandra_diff_spark.operators.temporal import decayed_counts_from_state
     from cassandra_diff_spark.streaming.diff_stream import (
@@ -10359,49 +10377,6 @@ WHERE intersect_n * 5 >= 4 * (s1.n + s2.n - intersect_n)
 
 QUERIES["dedup_prefix_jaccard"] = _q_dedup_prefix_jaccard
 ORACLES["dedup_prefix_jaccard"] = _O_DEDUP_PREFIX_JACCARD
-
-
-def _with_stream_conf(fn):
-    """Run a streaming gate under 8 state partitions instead of the
-    session's 32. Every stateful micro-batch pays a per-partition state
-    store commit, so at gate scale (kilobytes of state, 3-4 triggers)
-    the 32-way layout is pure fixed overhead — measured ~26% of a warm
-    drain. A production deployment sizes ``spark.sql.shuffle.partitions``
-    to its cluster; the operators themselves are partition-count
-    agnostic (the drained result is checked against the batch oracle
-    either way). The session value is restored after the drain — the
-    library functions await termination inside, so nothing stateful
-    outlives the override."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    wrapped.__stream_conf__ = True  # idempotence marker for ensure_stream_wrapped
-    return wrapped
-
-
-def ensure_stream_wrapped(queries: dict) -> dict:
-    """The one wrap path for the stream-conf override: every registry
-    consumer (``__spark_entry__.queries()``, ``bench.py``, the profiling
-    scripts) calls it on the MERGED registry, so every 'stream'-named
-    gate gets the 8-partition drain conf no matter where or when it was
-    registered (``QUERIES`` itself holds the unwrapped gates);
-    already-wrapped entries pass through."""
-    return {
-        n: (
-            fn
-            if "stream" not in n or getattr(fn, "__stream_conf__", False)
-            else _with_stream_conf(fn)
-        )
-        for n, fn in queries.items()
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -11023,6 +10998,7 @@ def _q_eval_calibration_stream(spark, sf_dir):
     complete-mode fixed-grid bin aggregation (state = 8 rows), and the
     SAME batch oracle replays the result — a live reliability diagram
     whose drained state must equal the batch report bit-for-bit."""
+    spark = _stream_session(spark)
     from cassandra_diff_spark.streaming.diff_stream import (
         stream_calibration_bins,
     )

@@ -760,7 +760,9 @@ def dedup_clusters(
     duplicates, so convergence is fast; this is a deliberately ITERATIVE
     operator (driver-side loop with an action per round — the Spark
     idiom for fixpoint algorithms; a Catalyst plan cannot express
-    recursion). Labels are cached per round and unpersisted after use.
+    recursion). Each round's labels are checkpointed and freed once the
+    next round is materialized; the final round's blocks stay pinned
+    until the caller's ``operators.release_caches()``.
 
     Input: (id_1, id_2) pair frame (any extra columns ignored).
     Output: (id, cluster_id) for every id appearing in a pair.
@@ -854,20 +856,26 @@ def dedup_clusters(
             und.unpersist()
             return pairs.sparkSession.createDataFrame(rows, schema)
 
+    from cassandra_diff_spark.operators import (
+        free_checkpoint,
+        track_checkpoint,
+        tracked_cache,
+    )
+
     e = und.select(F.col("id_1").alias("a"), F.col("id_2").alias("b"))
     edges = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .cache()
     )
-    cached = (
+    # tracked: it is the result itself when max_iters is 0
+    labels = tracked_cache(
         edges.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .cache()
     )
-    labels = cached
     changed = 0
+    prev = None  # the previous round's checkpoint, freed once superseded
     for _ in range(max_iters):
         nbr = (
             edges.join(labels.withColumnRenamed("id", "a"), "a")
@@ -896,8 +904,12 @@ def dedup_clusters(
             ).alias("label"),
         ).localCheckpoint(eager=True)
         changed = new_labels.filter(F.col("label") != F.col("__old")).count()
-        cached.unpersist()
-        cached = new_labels  # the frame actually holding the cache
+        # the new round is materialized and no longer reads the old one
+        if prev is None:
+            labels.unpersist()
+        else:
+            free_checkpoint(prev)
+        prev = new_labels
         labels = new_labels.select("id", "label")
         if changed == 0:
             break
@@ -910,14 +922,14 @@ def dedup_clusters(
             f"{max_iters}); raise max_iters"
         )
         if strict:
-            cached.unpersist()
+            if prev is not None:
+                free_checkpoint(prev)
             raise RuntimeError(msg)
         import warnings
 
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    from cassandra_diff_spark.operators import _LIVE_CACHES
-
-    _LIVE_CACHES.append(cached)  # final labels stay cached for the caller
+    if prev is not None:  # the final labels stay pinned for the caller
+        track_checkpoint(prev)
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

@@ -87,15 +87,29 @@ def _drain_table(
     df: DataFrame, name: str, checkpoint: "str | None" = None, mode: str = "complete"
 ) -> DataFrame:
     """availableNow drain of ``df`` into the in-memory table ``name`` —
-    the shared tail of every memory-sink operator here."""
-    w = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
-    _drain(w, checkpoint)
-    return df.sparkSession.table(name)
+    the shared tail of every memory-sink operator here.
+
+    A memory sink restarts from a checkpoint in complete mode only. So a
+    durable ``checkpoint`` with any other mode drains through
+    ``foreachBatch`` into parquet under the checkpoint instead: one
+    directory per epoch, overwritten when Spark replays that epoch, and
+    the result is every epoch written so far, this run's and earlier
+    ones'."""
+    w = df.writeStream.outputMode(mode).queryName(name).trigger(availableNow=True)
+    if not checkpoint or mode == "complete":
+        _drain(w.format("memory"), checkpoint)
+        return df.sparkSession.table(name)
+    out = f"{checkpoint.rstrip('/')}/output"
+
+    def write(batch: DataFrame, epoch_id: int) -> None:
+        batch.write.mode("overwrite").parquet(f"{out}/{epoch_id}")
+
+    _drain(w.foreachBatch(write), checkpoint)
+    spark = df.sparkSession
+    path = spark._jvm.org.apache.hadoop.fs.Path(out)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        return spark.createDataFrame([], df.schema)  # no epoch ran yet
+    return spark.read.schema(df.schema).option("recursiveFileLookup", True).parquet(out)
 
 
 def _py_state_values(a, spark_type):
@@ -829,8 +843,11 @@ def stream_asof_join_forward(
         if lts or len(r_ts):
             _save(state, lts, *lvals, r_ts, r_tb, *r_v)
             if lts:
-                # wake when the earliest unresolved window can close
-                state.setTimeoutTimestamp(max(min(lts) + tol, wm_us) // 1000 + 1)
+                # wake when the earliest pending answer can turn final:
+                # at its candidate's ts, or without one when its window
+                # closes
+                wake = int(np.where(valid, cand, lts_a + tol)[~done].min())
+                state.setTimeoutTimestamp(max(wake, wm_us) // 1000 + 1)
         elif state.exists:
             state.remove()
         return out

@@ -140,11 +140,15 @@ class TestMachineHealthProbe:
             assert 0 <= h["steal_pct"] <= 100
 
     def test_summary_line_carries_machine_block(self):
-        """The emitted summary dict wires the probe in: guard the key so
-        a refactor cannot silently drop it from BENCH_r13+ artifacts."""
-        src = (REPO / "bench.py").read_text()
-        assert '"machine": health,' in src
-        assert "health_launch = machine_health()" in src
+        """The bench result carries both machine-health probes, so a
+        refactor cannot silently drop them from the BENCH artifacts."""
+        sys.path.insert(0, str(REPO))
+        import bench
+
+        launch, end = {"spin_ms": 1.0}, {"spin_ms": 2.0}
+        out = bench.bench_result({"q": 1.5, "r": 2.0}, {}, 0.1, launch, end)
+        assert out["machine"] == {"launch": launch, "end": end}
+        assert out["value"] == 3.5 and "errors" not in out
 
 
 class TestLiveFlagshipGuard:

@@ -1,6 +1,7 @@
 """Driver-contract invariants of __spark_entry__: the gate registry the
-driver sees must be complete, oracle-paired, and stream-conf-wrapped —
-the properties round verdicts depend on but no test previously pinned."""
+driver sees must be complete, oracle-paired, and run every stream gate
+on its own session — the properties round verdicts depend on but no
+test previously pinned."""
 
 from __future__ import annotations
 
@@ -30,16 +31,17 @@ def test_every_gate_is_oracle_paired():
 
 
 def test_stream_gates_arrive_wrapped():
-    """The r7 advice item: a streaming gate registered after the
-    import-time wrap loop (or in gate.py) silently ran at 32 state
-    partitions. ensure_stream_wrapped at the merge point closes that;
-    this pins it for every future registration."""
+    """Every streaming gate runs on its own child session at 8 state
+    partitions, whichever registry it came from: a stream gate that
+    skips ``_stream_session`` drains at the caller's partition count
+    and shares the caller's memory-sink names."""
     m = _entry()
+    stream = {n: fn for n, fn in m.queries().items() if "stream" in n}
     bad = [
-        n
-        for n, fn in m.queries().items()
-        if "stream" in n and not getattr(fn, "__stream_conf__", False)
+        n for n, fn in stream.items()
+        if "_stream_session" not in fn.__code__.co_names
     ]
+    assert stream
     assert not bad, bad
 
 

@@ -49,10 +49,10 @@ SCALES = [
 #: a small thread pool (guide §2.6: actions are only sequential because
 #: the driver calls them sequentially) cut the sf0.001 leg from 473 s to
 #: ~⅓ while running the EXACT same ~280 checks. Gate thread-safety:
-#: memory-sink queryNames are unique per gate, fixture staging is
-#: pre-run (and flocked), tracked_cache appends are GIL-atomic, and the
-#: one session-conf wrapper (_with_stream_conf) writes the value the
-#: test session already runs at (shuffle_partitions=8).
+#: fixture staging is pre-run (and flocked); every stream gate drains
+#: on its own child session, so no gate writes the shared session's
+#: conf and memory-sink names cannot collide; the operator cache
+#: registry is per thread, so each worker releases only its own caches.
 SWEEP_THREADS = 8
 
 
@@ -62,7 +62,7 @@ def test_three_scale_sweep(spark, sf_name):
     import threading
 
     import __spark_entry__ as entrymod
-    from cassandra_diff_spark import gate_pipeline
+    from cassandra_diff_spark import gate_pipeline, operators
 
     sf_dir = f"/root/testdata/{sf_name}"
     if not Path(sf_dir).is_dir():
@@ -90,6 +90,7 @@ def test_three_scale_sweep(spark, sf_name):
             try:
                 name = work.get_nowait()
             except queue.Empty:
+                operators.release_caches()
                 return
             try:
                 spark_pdf = queries[name](spark, sf_dir).toPandas()
