@@ -52,6 +52,7 @@ from cassandra_diff_spark.operators.digest import (
 )
 from cassandra_diff_spark.plans.splits import MURMUR3_MAX, MURMUR3_MIN, calculate_splits
 from cassandra_diff_spark.sources.catalog import resolve_tables, table_config_for
+from cassandra_diff_spark.sources.provider import CassandraSourceProvider
 
 
 def job_seed(job_id: str) -> int:
@@ -101,8 +102,6 @@ def run_job(
         raise RuntimeError("another job holds the running_jobs mutex")
 
     try:
-        apply_rate_limit(spark, cfg)
-
         # resume-grid guard: the chunk/split grid must be identical across
         # runs of one job_id — a chunk straddling a watermark from a
         # different grid would re-run a sub-range already summed into
@@ -120,6 +119,7 @@ def run_job(
             journal.save_plan_params(job_id, splits_per_table, mid_split_chunks)
 
         tables, src_provider, tgt_provider = resolve_tables(spark, cfg)
+        apply_rate_limit(cfg, src_provider, tgt_provider)
 
         # PLAN: equal-width token splits over the xxhash64 ring
         splits = calculate_splits(splits_per_table, cfg.buckets, MURMUR3_MIN, MURMUR3_MAX)
@@ -377,17 +377,19 @@ def table_drift_report(
     )
 
 
-def apply_rate_limit(spark: SparkSession, cfg: JobConfig) -> None:
-    """ST4: map the job's global read budget onto the Cassandra
-    connector's throttle (``spark.cassandra.input.reads_per_sec``) when
-    either side reads from Cassandra — the reference enforces the same
-    q/s budget with a Guava RateLimiter (DiffJob.java:153,
-    Differ.java:105, DiffCluster.java:172). For file/catalog sources the
-    key is a documented no-op: bulk columnar scans have no per-partition
-    request rate to budget; Spark's scheduler already bounds parallelism
-    via executor slots."""
-    if "cassandra" in (cfg.source.provider, cfg.target.provider):
-        spark.conf.set("spark.cassandra.input.reads_per_sec", str(cfg.rate_limit))
+def apply_rate_limit(cfg: JobConfig, *providers) -> None:
+    """ST4: forward the job's global read budget to each Cassandra side as
+    the connector's throttle (``spark.cassandra.input.reads_per_sec``) —
+    the reference enforces the same q/s budget with a Guava RateLimiter
+    (DiffJob.java:153, Differ.java:105, DiffCluster.java:172). The budget
+    rides the provider's per-read connector options, so no session conf
+    is written, and a side's own ``spark.cassandra.input.reads_per_sec``
+    option wins. File/catalog sides get none: bulk columnar scans have no
+    per-partition request rate to budget; Spark's scheduler already
+    bounds parallelism via executor slots."""
+    for p in providers:
+        if isinstance(p, CassandraSourceProvider):
+            p.conn.setdefault("spark.cassandra.input.reads_per_sec", str(cfg.rate_limit))
 
 
 def _tagged_read(provider, spark: SparkSession, table: str, side: str) -> DataFrame:

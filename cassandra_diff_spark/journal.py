@@ -4,12 +4,26 @@ Replaces the reference's 12-table Cassandra metadata keyspace
 (JobMetadataDb.java:493-652) with parquet tables under one journal path:
 
   job_summary       — one row per job (params, start time)           (S11)
+  job_plan          — the job's split grid (splits, chunks per split) (ST2)
   running_jobs      — mutex marker files (LWT analog)                (ST3)
   task_status       — per (job, bucket, table, split) progress row   (S8/ST1)
+  task_progress     — per finished mid-split chunk: watermark token
+                      and that chunk's counters                      (ST2)
   mismatches        — (job, bucket, table, token, mismatch_type)     (S9)
   task_errors       — split-level error summary                      (S10)
   partition_errors  — per-token error detail w/ source attribution   (S10/ST6)
   job_results       — final 9-counter stats per table                (S11)
+
+Every table but ``mismatches`` is written on the driver, as the reference
+sends single CQL statements (JobMetadataDb.java:359-430): one ``pyarrow``
+file per write, under a dot-prefixed temp name that every reader skips,
+then ``os.replace``d to its final name, so readers see a whole file or
+none (:meth:`Journal._write`). The rename is atomic on local POSIX
+filesystems, like the mutex markers; an object store would need a
+conditional put for both. ``mismatches`` is data-sized and its write is
+the action that runs the diff, so it is written through Spark. run_job
+reads metadata values on the driver; metadata frames (the API, the
+resume anti-join) are read through Spark.
 
 The reference's four index tables (job_id by source cluster / target
 cluster / keyspace / start-hour, JobMetadataDb.java:566-617) are replaced
@@ -17,41 +31,89 @@ by predicate queries over job_summary — Spark needs no manual secondary
 indexes (SURVEY.md §2.4 J5). The C* ``counter`` completed-count
 (JobMetadataDb.java:543-549) is derived as a count(*) view (A6).
 
-Progress writes are best-effort (ST9): a write that still fails after
-its retries emits a ``RuntimeWarning`` and returns False instead of
-raising; correctness never depends on the journal.
+Writes are best-effort (ST9): a write that still fails after its
+retries emits a ``RuntimeWarning`` and returns False instead of raising;
+correctness never depends on the journal.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import time
+import uuid
 import warnings
 from dataclasses import dataclass
+from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_diff_spark.config import JobConfig
 from cassandra_diff_spark.model import STAT_FIELDS, DiffStats
 from cassandra_diff_spark.retry import strategy_for
 
-#: Schema of the job_summary table (init_job's Row) — used to build an
-#: empty frame for API reads against a journal with no jobs yet.
+_STATS_DDL = ", ".join(f"{f} bigint" for f in STAT_FIELDS)
+
+#: Schema of the job_summary table — also used to build an empty frame
+#: for API reads against a journal with no jobs yet.
 JOB_SUMMARY_SCHEMA = (
     "job_id string, keyspace_tables string, buckets long, splits long, "
     "source_cluster_name string, source_cluster_desc string, "
     "target_cluster_name string, target_cluster_desc string, "
     "start string, start_date string, start_hour long"
 )
-
 TASK_STATUS_SCHEMA = (
     "job_id string, bucket int, qualified_table_name string, split int, "
-    "last_token bigint, ts timestamp, "
-    + ", ".join(f"{f} bigint" for f in STAT_FIELDS)
+    f"last_token bigint, ts timestamp, {_STATS_DDL}"
 )
+TASK_ERRORS_SCHEMA = (
+    "job_id string, bucket int, qualified_table_name string, split int, "
+    "error_source string"
+)
+PARTITION_ERRORS_SCHEMA = (
+    "job_id string, bucket int, qualified_table_name string, token bigint, "
+    "error_source string, error string"
+)
+JOB_RESULTS_SCHEMA = f"table string, {_STATS_DDL}, job_id string"
+JOB_PLAN_SCHEMA = "job_id string, splits_per_table int, mid_split_chunks int"
+
+#: DDL of every driver-written table, its one schema declaration
+SCHEMAS = {
+    "job_summary": JOB_SUMMARY_SCHEMA, "job_plan": JOB_PLAN_SCHEMA,
+    "task_status": TASK_STATUS_SCHEMA, "task_progress": TASK_STATUS_SCHEMA,
+    "task_errors": TASK_ERRORS_SCHEMA, "partition_errors": PARTITION_ERRORS_SCHEMA,
+    "job_results": JOB_RESULTS_SCHEMA,
+}
+
+#: parquet types exactly as Spark writes each DDL type: Spark refuses a
+#: directory whose files disagree on a column's physical type, and the
+#: session reads NANOS timestamps as bigint, hence microseconds
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+    "long": pa.int64(), "timestamp": pa.timestamp("us", tz="UTC"),
+}
+_ARROW_SCHEMAS = {
+    name: pa.schema([(c, _ARROW_TYPES[t]) for c, t in map(str.split, ddl.split(","))])
+    for name, ddl in SCHEMAS.items()
+}
+
+
+def _unit_row(
+    job_id: str, bucket: int, table: str, split: int, last_token: int, stats: dict
+) -> dict:
+    """One task_status / task_progress row: a unit's (or chunk's)
+    watermark token and counters, stamped with the write time."""
+    return {
+        "job_id": job_id, "bucket": bucket, "qualified_table_name": table,
+        "split": split, "last_token": int(last_token), "ts": datetime.now(timezone.utc),
+        **{f: int(stats.get(f, 0)) for f in STAT_FIELDS},
+    }
 
 
 @dataclass
@@ -80,46 +142,44 @@ class Journal:
             )
             return False
 
-    def _append(self, name: str, df: DataFrame) -> bool:
-        return self._best_effort(
-            name, lambda: df.write.mode("append").parquet(self._table(name))
-        )
+    def _write(self, name: str, rows: list[dict], key: str | None = None) -> bool:
+        """Write ``rows`` as one file of table ``name``, typed by its DDL:
+        a temp file ``os.replace``d to ``<key>.parquet`` — an idempotent
+        upsert, so a crash replay never duplicates rows (the reference's
+        LWT batches) — or, with no key, to a fresh ``<uuid>.parquet``."""
+        d = self._table(name)
+        fname = uuid.uuid4().hex if key is None else self._marker_name(key)
+
+        def write():
+            os.makedirs(d, exist_ok=True)
+            tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
+            try:
+                pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW_SCHEMAS[name]), tmp)
+                os.replace(tmp, os.path.join(d, fname + ".parquet"))
+            except BaseException:
+                with contextlib.suppress(OSError):
+                    os.remove(tmp)
+                raise
+
+        return self._best_effort(name if key is None else f"{name}/{key}", write)
+
+    def _lookup(self, name: str, columns: list[str], **match) -> list[dict]:
+        """``columns`` of the rows of driver-written table ``name`` whose
+        values equal ``match``, read on the driver without a Spark job
+        ([] while the table does not exist)."""
+        p = self._table(name)
+        if not os.path.isdir(p):
+            return []
+        filters = [(k, "==", v) for k, v in match.items()] or None
+        return pq.read_table(
+            p, columns=columns, schema=_ARROW_SCHEMAS[name], filters=filters
+        ).to_pylist()
 
     def _read(self, name: str) -> DataFrame | None:
         p = self._table(name)
-        if not os.path.exists(p):
+        if not os.path.isdir(p):
             return None
         return self.spark.read.parquet(p)
-
-    def _atomic_keyed_write(self, name: str, df: DataFrame, key: str) -> bool:
-        """Exactly-once KEYED write — the parquet journal's answer to the
-        reference's LWT batches (JobMetadataDb.java:359-430): the row set
-        for one logical key is staged to a scratch dir, coalesced to a
-        single part file, and ``os.replace``d to ``<table>/<key>.parquet``.
-
-        The rename is atomic on POSIX (an object-store deployment would
-        use a conditional put, same as the mutex marker): readers see the
-        old content or the new content, never a partial file. Re-writing
-        the same key REPLACES the file — an idempotent upsert, so a crash
-        replay can never duplicate rows the way append-mode could.
-        Best-effort envelope (ST9), like :meth:`_append`."""
-        import shutil
-
-        d = self._table(name)
-        os.makedirs(d, exist_ok=True)
-        fname = self._marker_name(key)
-        stage = os.path.join(self.path, f"__stage__{name}__{fname}")
-        target = os.path.join(d, fname + ".parquet")
-
-        def write():
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            os.replace(os.path.join(stage, part), target)
-            shutil.rmtree(stage, ignore_errors=True)
-
-        return self._best_effort(f"{name}/{fname}", write)
 
     # ------------------------------------------------------------ lifecycle
 
@@ -187,20 +247,17 @@ class Journal:
         produced — journaled so job_status's % -complete denominator
         matches the real work list (cfg.splits is only the requested
         default)."""
-        row = Row(
-            job_id=job_id,
-            keyspace_tables=json.dumps(tables),
-            buckets=cfg.buckets,
-            splits=planned_splits if planned_splits is not None else cfg.splits,
-            source_cluster_name=cfg.source.provider,
-            source_cluster_desc=json.dumps(cfg.source.options),
-            target_cluster_name=cfg.target.provider,
-            target_cluster_desc=json.dumps(cfg.target.options),
-            start=time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
-            start_date=time.strftime("%Y-%m-%d", time.gmtime()),
-            start_hour=int(time.strftime("%H", time.gmtime())),
-        )
-        self._append("job_summary", self.spark.createDataFrame([row]))
+        now = time.gmtime()
+        self._write("job_summary", [{
+            "job_id": job_id, "keyspace_tables": json.dumps(tables), "buckets": cfg.buckets,
+            "splits": planned_splits if planned_splits is not None else cfg.splits,
+            "source_cluster_name": cfg.source.provider,
+            "source_cluster_desc": json.dumps(cfg.source.options),
+            "target_cluster_name": cfg.target.provider,
+            "target_cluster_desc": json.dumps(cfg.target.options),
+            "start": time.strftime("%Y-%m-%d %H:%M:%S", now),
+            "start_date": time.strftime("%Y-%m-%d", now), "start_hour": now.tm_hour,
+        }])
 
     # ------------------------------------------------------------- progress
 
@@ -216,23 +273,12 @@ class Journal:
         """S8/ST1: journal a completed work unit. Spark's unit of resume is
         the split/table (idempotent re-run), so one atomic row per finished
         unit replaces the reference's checkpoint-every-10-partitions CAS
-        loop (RangeComparator.java:215-243)."""
-        row = {
-            "job_id": job_id,
-            "bucket": bucket,
-            "qualified_table_name": table,
-            "split": split,
-            "last_token": last_token,
-            "ts": None,
-            **{f: int(stats.get(f, 0)) for f in STAT_FIELDS},
-        }
-        df = self.spark.createDataFrame([row], TASK_STATUS_SCHEMA).withColumn(
-            "ts", F.current_timestamp()
-        )
-        # keyed upsert: a crash replay of the unit overwrites its own row
-        # instead of appending a duplicate (exactly-once per unit)
-        self._atomic_keyed_write(
-            "task_status", df, f"{job_id}|{table}|{split}"
+        loop (RangeComparator.java:215-243). Keyed per unit: a crash
+        replay overwrites its own row (exactly-once per unit)."""
+        self._write(
+            "task_status",
+            [_unit_row(job_id, bucket, table, split, last_token, stats)],
+            f"{job_id}|{table}|{split}",
         )
 
     def record_progress(
@@ -242,77 +288,46 @@ class Journal:
         table: str,
         split: int,
         last_token: int,
-        stats: object,
+        stats: DiffStats,
     ) -> None:
         """ST2 mid-split checkpoint: one row per finished sub-range of a
         split — high-watermark token + that chunk's partial counters
         (reference: last_token checkpoint every 10 partitions,
-        RangeComparator.java:215-243 / JobMetadataDb.java:182-217)."""
-        row = {
-            "job_id": job_id,
-            "bucket": bucket,
-            "qualified_table_name": table,
-            "split": split,
-            "last_token": int(last_token),
-            "ts": None,
-            **{f: int(getattr(stats, f, 0)) for f in STAT_FIELDS},
-        }
-        df = self.spark.createDataFrame([row], TASK_STATUS_SCHEMA).withColumn(
-            "ts", F.current_timestamp()
-        )
-        # keyed by chunk watermark: a replayed chunk overwrites its own
-        # checkpoint row (progress_stats' dedup-by-token stays as a
-        # belt-and-braces read guard for journals written by older code)
-        self._atomic_keyed_write(
-            "task_progress", df, f"{job_id}|{table}|{split}|{int(last_token)}"
+        RangeComparator.java:215-243 / JobMetadataDb.java:182-217). Keyed
+        by chunk watermark: a replayed chunk overwrites its own row."""
+        self._write(
+            "task_progress",
+            [_unit_row(job_id, bucket, table, split, last_token, vars(stats))],
+            f"{job_id}|{table}|{split}|{int(last_token)}",
         )
 
     def split_watermark(self, job_id: str, table: str, split: int) -> int | None:
         """Highest journaled last_token for an in-flight split, or None
         (resume prefilter: Differ.java:161-171)."""
-        tp = self._read("task_progress")
-        if tp is None:
-            return None
-        row = (
-            tp.filter(
-                (F.col("job_id") == job_id)
-                & (F.col("qualified_table_name") == table)
-                & (F.col("split") == split)
-            )
-            .agg(F.max("last_token"))
-            .first()
+        rows = self._lookup(
+            "task_progress", ["last_token"],
+            job_id=job_id, qualified_table_name=table, split=split,
         )
-        return row[0] if row and row[0] is not None else None
+        return max((r["last_token"] for r in rows), default=None)
 
-    def progress_stats(self, job_id: str, table: str, split: int):
-        """Sum of journaled per-chunk counters for a split (dedup by
-        last_token first: at-least-once journaling can duplicate a chunk
-        row after a crash between writes), or None if no progress."""
-        from cassandra_diff_spark.model import DiffStats
-
-        tp = self._read("task_progress")
-        if tp is None:
-            return None
-        per_chunk = (
-            tp.filter(
-                (F.col("job_id") == job_id)
-                & (F.col("qualified_table_name") == table)
-                & (F.col("split") == split)
-            )
-            .groupBy("last_token")
-            .agg(*[F.max(f).alias(f) for f in STAT_FIELDS])
+    def progress_stats(self, job_id: str, table: str, split: int) -> DiffStats | None:
+        """Sum of journaled per-chunk counters for a split, or None if no
+        progress. Rows are deduplicated by last_token first: journals
+        written by older appends can hold a replayed chunk twice."""
+        rows = self._lookup(
+            "task_progress", ["last_token", *STAT_FIELDS],
+            job_id=job_id, qualified_table_name=table, split=split,
         )
-        row = per_chunk.agg(
-            F.count("*").alias("n__"), *[F.sum(f).alias(f) for f in STAT_FIELDS]
-        ).first()
-        if row is None or row["n__"] == 0:
+        chunks = {r["last_token"]: r for r in rows}.values()
+        if not chunks:
             return None
-        return DiffStats(**{f: int(row[f]) for f in STAT_FIELDS})
+        return DiffStats(**{f: sum(r[f] for r in chunks) for f in STAT_FIELDS})
 
     def record_mismatches(self, job_id: str, bucket: int, table: str, mismatches: DataFrame) -> bool:
         """S9: bulk mismatch sink — the join output filtered to mismatch
-        rows, written distributed (no driver loop). False iff the write
-        failed (best-effort envelope)."""
+        rows, written distributed (no driver loop); this write is the
+        action that runs the diff. False iff the write failed
+        (best-effort envelope)."""
         out = mismatches.select(
             F.lit(job_id).alias("job_id"),
             F.lit(bucket).alias("bucket"),
@@ -320,7 +335,8 @@ class Journal:
             F.col("token").cast("long").alias("token"),
             F.col("mismatch_type"),
         )
-        return self._append("mismatches", out)
+        target = self._table("mismatches")
+        return self._best_effort("mismatches", lambda: out.write.mode("append").parquet(target))
 
     def record_error(
         self, job_id: str, bucket: int, table: str, split: int, token: int | None,
@@ -328,59 +344,45 @@ class Journal:
     ) -> None:
         """S10 + ST6: error range summary + per-token detail with
         source-cluster attribution (ClusterSourcedException.java:11-31)."""
-        self._append(
-            "task_errors",
-            self.spark.createDataFrame(
-                [(job_id, bucket, table, split, error_source)],
-                "job_id string, bucket int, qualified_table_name string, "
-                "split int, error_source string",
-            ),
-        )
+        where = {"job_id": job_id, "bucket": bucket, "qualified_table_name": table}
+        self._write("task_errors", [{**where, "split": split, "error_source": error_source}])
         if token is not None:
-            self._append(
-                "partition_errors",
-                self.spark.createDataFrame(
-                    [(job_id, bucket, table, int(token), error_source, error[:1000])],
-                    "job_id string, bucket int, qualified_table_name string, "
-                    "token bigint, error_source string, error string",
-                ),
-            )
+            self._write("partition_errors", [{
+                **where, "token": int(token), "error_source": error_source,
+                "error": error[:1000],
+            }])
 
     def finalize_job(self, job_id: str, stats: dict[str, DiffStats]) -> None:
         """S11: final per-table results (JobMetadataDb.java:432-469).
 
-        Exactly-once: the whole per-job result set lands as ONE atomic
-        keyed file — a crashed finalize leaves nothing visible, a
-        replayed finalize replaces its own rows (never appends
-        duplicates), matching the reference's LWT-batch commit."""
-        df = self.spark.createDataFrame(
-            [(t, *[getattr(s, f) for f in STAT_FIELDS]) for t, s in sorted(stats.items())],
-            "table string, " + ", ".join(f"{f} bigint" for f in STAT_FIELDS),
+        Exactly-once: the whole per-job result set lands as ONE keyed
+        file — a crashed finalize leaves nothing visible, a replayed
+        finalize replaces its own rows (never appends duplicates),
+        matching the reference's LWT-batch commit."""
+        self._write(
+            "job_results",
+            [{"table": t, "job_id": job_id, **vars(s)} for t, s in sorted(stats.items())],
+            job_id,
         )
-        self._atomic_keyed_write("job_results", df.withColumn("job_id", F.lit(job_id)), job_id)
         self.mark_not_running(job_id)
 
     def is_finalized(self, job_id: str) -> bool:
         """True iff job_results already holds rows for this job (covers
         both the keyed layout and journals written by older appends)."""
-        jr = self._read("job_results")
-        return jr is not None and bool(
-            jr.filter(F.col("job_id") == job_id).head(1)
-        )
+        return bool(self._lookup("job_results", ["job_id"], job_id=job_id))
 
     def results_from_task_status(self, job_id: str) -> dict[str, DiffStats]:
         """Per-table accumulation (A4) of the job's journaled unit rows —
         the seed of a resumed job's COMMIT, so the result covers the units
         earlier runs completed as well as the ones this run executes."""
-        done = self.completed_units(job_id)
-        if done is None:
-            return {}
-        rows = (
-            done.groupBy(F.col("qualified_table_name").alias("table"))
-            .agg(*[F.sum(f).cast("long").alias(f) for f in STAT_FIELDS])
-            .collect()
-        )
-        return {r.table: DiffStats.from_row(r) for r in rows}
+        out: dict[str, DiffStats] = {}
+        for r in self._lookup(
+            "task_status", ["qualified_table_name", *STAT_FIELDS], job_id=job_id
+        ):
+            out.setdefault(r["qualified_table_name"], DiffStats()).accumulate(
+                DiffStats.from_row(r)
+            )
+        return out
 
     # ------------------------------------------------------ planning params
 
@@ -393,22 +395,18 @@ class Journal:
         chunk bounds line up, and filter_pending matches on split
         numbers — a different grid would double-count sub-ranges already
         summed into progress_stats."""
-        df = self.spark.createDataFrame(
-            [(job_id, int(splits_per_table), int(mid_split_chunks))],
-            "job_id string, splits_per_table int, mid_split_chunks int",
-        )
-        self._atomic_keyed_write("job_plan", df, job_id)
+        self._write("job_plan", [{
+            "job_id": job_id, "splits_per_table": int(splits_per_table),
+            "mid_split_chunks": int(mid_split_chunks),
+        }], job_id)
 
     def plan_params(self, job_id: str) -> tuple[int, int] | None:
         """(splits_per_table, mid_split_chunks) journaled for this job,
         or None if this is its first run."""
-        jp = self._read("job_plan")
-        if jp is None:
-            return None
-        rows = jp.filter(F.col("job_id") == job_id).head(1)
-        return (
-            (rows[0].splits_per_table, rows[0].mid_split_chunks) if rows else None
+        rows = self._lookup(
+            "job_plan", ["splits_per_table", "mid_split_chunks"], job_id=job_id
         )
+        return (rows[0]["splits_per_table"], rows[0]["mid_split_chunks"]) if rows else None
 
     # --------------------------------------------------------------- resume
 
@@ -466,10 +464,7 @@ def vacuum(
     Rewrites task_status dropping rows whose ``ts`` is older than the TTL;
     returns {table: rows_dropped}.
     """
-    import shutil
-    import time as _time
-
-    now = now_epoch if now_epoch is not None else _time.time()
+    now = now_epoch if now_epoch is not None else time.time()
     # unix_timestamp() truncates to whole seconds — floor the cutoff so a
     # row written in the same second as the cutoff is retained
     cutoff = int(now - ttl_seconds)
@@ -503,8 +498,6 @@ def compact(journal: "Journal", target_mb: int = 64) -> dict:
     against a concurrently appending writer (the reference ages rows
     server-side inside Cassandra; an explicit maintenance step is the
     parquet journal's equivalent)."""
-    import shutil
-
     from cassandra_diff_spark.operators.bucketed import compact_parquet
 
     out = {}

@@ -299,6 +299,63 @@ class TestMidSplitResume:
         assert calls2["n"] == 2, "resume must skip chunks below the watermark"
         assert res.stats["orders"] == baseline  # journaled + fresh chunks sum exactly
 
+    def test_resume_over_spark_written_progress(self, spark, pair_dirs, tmp_path, monkeypatch):
+        """A journal whose task_status / task_progress files were written
+        by Spark's append writer resumes under the driver-side lookups
+        with the same watermark, the same counters and the same result."""
+        import shutil
+
+        from cassandra_diff_spark.journal import SCHEMAS
+
+        src_dir, tgt_dir = pair_dirs
+        grid = {"splits_per_table": 2, "mid_split_chunks": 2}
+        baseline = run_job(
+            spark, make_cfg(src_dir, tgt_dir, str(tmp_path / "jsb"), job_id="sb"), **grid
+        ).stats["orders"]
+
+        orig = Journal.record_progress
+        calls = {"n": 0}
+
+        def crashing(self, *a, **k):
+            orig(self, *a, **k)
+            calls["n"] += 1
+            if calls["n"] == 3:  # split 0 done, split 1 half done
+                raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(Journal, "record_progress", crashing)
+        jdir = str(tmp_path / "jsw")
+        cfg = make_cfg(src_dir, tgt_dir, jdir, job_id="sw")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_job(spark, cfg, **grid)
+
+        j = Journal(spark, jdir)
+
+        def lookups():
+            return (
+                j.split_watermark("sw", "orders", 1),
+                j.progress_stats("sw", "orders", 1),
+                j.results_from_task_status("sw"),
+            )
+
+        before = lookups()
+        assert before[0] is not None and set(before[2]) == {"orders"}
+        for name in ("task_status", "task_progress"):
+            rows = [r.asDict() for r in j._read(name).collect()]
+            shutil.rmtree(j._table(name))
+            spark.createDataFrame(rows, SCHEMAS[name]).write.parquet(j._table(name))
+        assert lookups() == before
+
+        calls2 = {"n": 0}
+
+        def counting(self, *a, **k):
+            calls2["n"] += 1
+            return orig(self, *a, **k)
+
+        monkeypatch.setattr(Journal, "record_progress", counting)
+        res = run_job(spark, cfg, **grid)
+        assert calls2["n"] == 1  # only split 1's second chunk is left
+        assert res.stats["orders"] == baseline
+
 
 class TestResumeReportsWholeJob:
     """A resumed job's COMMIT covers every unit of the job: the units an
@@ -391,11 +448,13 @@ class TestResumeReportsWholeJob:
 
 
 class TestJournalFailureFallback:
-    """A failed mismatch write (best-effort journal) must not change the
-    job's counters: they are recounted with a direct action, and the
-    failure surfaces as a RuntimeWarning. Every plan kind's healthy
-    counters equal the classic run's (TestDigestPrunedJob,
-    TestColumnDigestJob), so one healthy classic run is the reference."""
+    """A failed journal write (best-effort, ST9) must not change the
+    job's counters or fail the job: a failed mismatch write is recounted
+    with a direct action, a failed task_status write only loses the
+    unit's resume row, and either failure surfaces as a RuntimeWarning.
+    Every plan kind's healthy counters equal the classic run's
+    (TestDigestPrunedJob, TestColumnDigestJob), so one healthy classic
+    run is the reference."""
 
     @pytest.fixture(scope="class")
     def healthy(self, spark, pair_dirs, tmp_path_factory):
@@ -403,22 +462,26 @@ class TestJournalFailureFallback:
         return run_job(spark, make_cfg(*pair_dirs, jdir, "healthy")).stats
 
     @pytest.mark.parametrize(
-        "extra",
+        "blocked,extra",
         [
-            "",
-            "digest_buckets: 64",
-            "digest_buckets: 64\n        digest_columns: true\n"
-            "        digest_unique_keys: true",
+            pytest.param("mismatches", "", id="classic"),
+            pytest.param("mismatches", "digest_buckets: 64", id="digest_buckets"),
+            pytest.param(
+                "mismatches",
+                "digest_buckets: 64\n        digest_columns: true\n"
+                "        digest_unique_keys: true",
+                id="digest_columns",
+            ),
+            pytest.param("task_status", "", id="task_status"),
         ],
-        ids=["classic", "digest_buckets", "digest_columns"],
     )
     def test_counters_survive_failed_mismatch_write(
-        self, spark, pair_dirs, tmp_path, healthy, extra
+        self, spark, pair_dirs, tmp_path, healthy, blocked, extra
     ):
-        # a regular file where the mismatches table directory belongs
-        # makes every append to it fail
-        (tmp_path / "mismatches").write_text("not a directory")
-        with pytest.warns(RuntimeWarning, match="journal write to mismatches failed"):
+        # a regular file where the table directory belongs makes every
+        # write to it fail
+        (tmp_path / blocked).write_text("not a directory")
+        with pytest.warns(RuntimeWarning, match=f"journal write to {blocked}"):
             failed = run_job(spark, make_cfg(*pair_dirs, str(tmp_path), "failed", extra))
         assert failed.stats == healthy
         assert failed.stats["orders"].mismatched_partitions > 0
@@ -568,26 +631,42 @@ class TestRateLimitAndProviders:
     def test_rate_limit_maps_to_connector_conf(self, spark):
         from cassandra_diff_spark.config import parse_config
         from cassandra_diff_spark.job import apply_rate_limit
+        from cassandra_diff_spark.sources.catalog import resolve_tables
 
+        key = "spark.cassandra.input.reads_per_sec"
         cfg = parse_config(
             {
                 "source": {"provider": "cassandra", "options": {"keyspace": "ks"}},
                 "target": {"provider": "parquet", "options": {"path": "/tmp/x"}},
+                "keyspace_tables": [{"name": "t", "partition_key": ["k"]}],
                 "rate_limit": 1234,
             }
         )
-        apply_rate_limit(spark, cfg)
-        assert spark.conf.get("spark.cassandra.input.reads_per_sec") == "1234"
-        # file-only jobs leave the throttle untouched (documented no-op)
+        _, src, tgt = resolve_tables(spark, cfg)
+        apply_rate_limit(cfg, src, tgt)
+        # the budget rides the Cassandra side's per-read connector options
+        assert src.conn[key] == "1234"
+        # the file side gets none (documented no-op) ...
+        assert "1234" not in str(vars(tgt))
+        # ... and the caller's session is never written
+        assert spark.conf.get(key, None) is None
+
+        # an explicit per-side option wins over the job-wide budget
         cfg2 = parse_config(
             {
-                "source": {"provider": "parquet", "options": {"path": "/tmp/a"}},
-                "target": {"provider": "parquet", "options": {"path": "/tmp/b"}},
+                "source": {"provider": "cassandra", "options": {"keyspace": "ks"}},
+                "target": {
+                    "provider": "cassandra",
+                    "options": {"keyspace": "ks", key: "50"},
+                },
+                "keyspace_tables": [{"name": "t", "partition_key": ["k"]}],
                 "rate_limit": 99,
             }
         )
-        apply_rate_limit(spark, cfg2)
-        assert spark.conf.get("spark.cassandra.input.reads_per_sec") == "1234"
+        _, src2, tgt2 = resolve_tables(spark, cfg2)
+        apply_rate_limit(cfg2, src2, tgt2)
+        assert (src2.conn[key], tgt2.conn[key]) == ("99", "50")
+        assert spark.conf.get(key, None) is None
 
     def test_cassandra_discovery_gated_on_connector(self, spark):
         from cassandra_diff_spark.sources.provider import CassandraSourceProvider
@@ -998,17 +1077,14 @@ def test_journal_compact_preserves_rows(spark, tmp_path):
     from cassandra_diff_spark.journal import Journal, compact
 
     j = Journal(spark, str(tmp_path / "jr"))
-    for i in range(6):  # 6 appends -> >= 6 files in task_status
-        j._append(
-            "task_status",
-            spark.createDataFrame([(f"job{i}", i)], "job_id string, split int"),
-        )
+    for i in range(6):  # 6 units -> 6 files in task_status
+        j.update_task_status(f"job{i}", 0, "t", i, {}, 0)
     import glob
 
-    before = len(glob.glob(str(tmp_path / "jr/task_status/part-*")))
+    before = len(glob.glob(str(tmp_path / "jr/task_status/*.parquet")))
     assert before >= 6
     n = compact(j, target_mb=64)
-    after = len(glob.glob(str(tmp_path / "jr/task_status/part-*")))
+    after = len(glob.glob(str(tmp_path / "jr/task_status/*.parquet")))
     assert after == n["task_status"] == 1
     got = sorted(r.job_id for r in j._read("task_status").collect())
     assert got == [f"job{i}" for i in range(6)]
@@ -1025,10 +1101,7 @@ def test_cli_compact_journal(spark, pair_dirs, tmp_path, capsys):
     jdir = tmp_path / "jc"
     j = Journal(spark, str(jdir))
     for i in range(5):
-        j._append(
-            "task_status",
-            spark.createDataFrame([(f"j{i}", i)], "job_id string, split int"),
-        )
+        j.update_task_status(f"j{i}", 0, "orders", i, {}, 0)
     cfg_file = tmp_path / "compact_cfg.yaml"
     cfg_file.write_text(
         f"job_id: cli-compact\n"
@@ -1043,7 +1116,7 @@ def test_cli_compact_journal(spark, pair_dirs, tmp_path, capsys):
     assert rc == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out == {"task_status": 1}
-    assert len(glob.glob(str(jdir / "task_status/part-*"))) == 1
+    assert len(glob.glob(str(jdir / "task_status/*.parquet"))) == 1
     assert j._read("task_status").count() == 5
 
 
