@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from cassandra_diff_spark import gate, gate_pipeline  # noqa: E402
-from cassandra_diff_spark.session import get_spark  # noqa: E402
+from cassandra_diff_spark.session import get_spark, local_cpus  # noqa: E402
 
 ALL_QUERIES = {**gate.QUERIES, **gate_pipeline.QUERIES}
 
@@ -286,7 +286,9 @@ def bench_result(
     timings: dict, errors: dict, sf: float, health_launch: dict, health_end: dict
 ) -> dict:
     """The bench's result dict: the headline total over the timed queries,
-    plus the machine-health probes taken at launch and at the end."""
+    plus the machine-health probes taken at launch and at the end and the
+    host shape: CPUs available to this process and the local master's
+    worker threads."""
     out = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -294,6 +296,7 @@ def bench_result(
         "queries": timings,
         "sf": sf,
         "machine": {"launch": health_launch, "end": health_end},
+        "host": {"nproc": len(os.sched_getaffinity(0)), "cpus": local_cpus()},
     }
     if errors:
         out["errors"] = errors
@@ -483,6 +486,7 @@ def main() -> None:
                 "value": total, "sf": sf, "queries": timings,
                 "control": control,
                 "machine": health,
+                "host": out["host"],
                 "errors": errors or None,
             }) + "\n")
     except OSError:
@@ -502,6 +506,7 @@ def main() -> None:
         "reps_per_query": N_REPS,
         "detail": "BENCH_HISTORY.jsonl",
         "machine": health,
+        "host": out["host"],
     }
     probe = out.get("scale_probe")
     if isinstance(probe, dict):

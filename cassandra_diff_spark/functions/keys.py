@@ -21,6 +21,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cassandra_diff_spark.functions.sql import idents
+
 #: Knuth multiplicative constant — used by the arithmetic token so the same
 #: token is computable in plain ANSI SQL by external oracles (e.g. DuckDB).
 _KNUTH = 2654435761
@@ -46,7 +48,7 @@ def token_expr(
     Python — the opt-in parity path, not the hot path.
     """
     if partitioner == "xxhash64":
-        return F.xxhash64(*[F.col(c) for c in pk_cols])
+        return F.expr(f"xxhash64({idents(pk_cols)})")
     if partitioner == "murmur3":
         from cassandra_diff_spark.functions.murmur3 import murmur3_token
 

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_diff_spark.config import JobConfig
+from cassandra_diff_spark.functions.sql import string_lit
 from cassandra_diff_spark.model import STAT_FIELDS, DiffStats
 from cassandra_diff_spark.retry import strategy_for
 
@@ -328,12 +329,12 @@ class Journal:
         rows, written distributed (no driver loop); this write is the
         action that runs the diff. False iff the write failed
         (best-effort envelope)."""
-        out = mismatches.select(
-            F.lit(job_id).alias("job_id"),
-            F.lit(bucket).alias("bucket"),
-            F.lit(table).alias("qualified_table_name"),
-            F.col("token").cast("long").alias("token"),
-            F.col("mismatch_type"),
+        out = mismatches.selectExpr(
+            f"{string_lit(job_id)} AS job_id",
+            f"{int(bucket)} AS bucket",
+            f"{string_lit(table)} AS qualified_table_name",
+            "CAST(token AS BIGINT) AS token",
+            "mismatch_type",
         )
         target = self._table("mismatches")
         return self._best_effort("mismatches", lambda: out.write.mode("append").parquet(target))
@@ -457,30 +458,34 @@ def vacuum(
     ttl_seconds: int = 31_536_000,
     now_epoch: float | None = None,
 ) -> dict:
-    """Metadata TTL enforcement (reference: 1-year TTL on every journal
-    table, MetadataKeyspaceOptions.java:27 / localconfig.yaml:29 — C* ages
-    rows server-side; the parquet journal compacts explicitly).
+    """Metadata TTL enforcement (reference: a 1-year metadata TTL,
+    MetadataKeyspaceOptions.java:27 / localconfig.yaml:29 — C* ages rows
+    server-side; the parquet journal compacts explicitly).
 
-    Rewrites task_status dropping rows whose ``ts`` is older than the TTL;
-    returns {table: rows_dropped}.
+    Rewrites each table that carries the write-time ``ts`` column —
+    ``task_status`` and ``task_progress`` — dropping rows whose ``ts`` is
+    older than the TTL; returns {table: rows_dropped} for those of them
+    that exist. ``job_summary``, ``job_plan``, ``task_errors``,
+    ``partition_errors``, ``job_results`` and ``mismatches`` have no
+    ``ts`` column and are not aged.
     """
     now = now_epoch if now_epoch is not None else time.time()
     # unix_timestamp() truncates to whole seconds — floor the cutoff so a
     # row written in the same second as the cutoff is retained
     cutoff = int(now - ttl_seconds)
     dropped = {}
-    ts_df = journal._read("task_status")
-    if ts_df is not None:
-        keep = ts_df.filter(
-            F.col("ts").isNull() | (F.unix_timestamp("ts") >= F.lit(cutoff))
-        )
-        n_before, n_after = ts_df.count(), keep.count()
+    for name in ("task_status", "task_progress"):
+        df = journal._read(name)
+        if df is None:
+            continue
+        keep = df.filter(f"ts IS NULL OR unix_timestamp(ts) >= {cutoff}")
+        n_before, n_after = df.count(), keep.count()
         if n_after < n_before:
-            tmp = journal._table("task_status") + "__compact"
+            tmp = journal._table(name) + "__compact"
             keep.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(journal._table("task_status"))
-            shutil.move(tmp, journal._table("task_status"))
-        dropped["task_status"] = n_before - n_after
+            shutil.rmtree(journal._table(name))
+            shutil.move(tmp, journal._table(name))
+        dropped[name] = n_before - n_after
     return dropped
 
 

@@ -189,7 +189,9 @@ def diff_colocated(
             *[F.col("s__").getField(c).alias(f"s_{c}") for c in val_cols],
             *[F.col("t__").getField(c).alias(f"t_{c}") for c in val_cols],
         )
-        row_vals = _row_value_counts(val_cols) + F.lit(len(key_regs)).cast("long")
+        row_vals = F.expr(
+            f"{_row_value_counts(val_cols)} + CAST({len(key_regs)} AS BIGINT)"
+        )
         paired = paired.select(
             *pk,
             "s_present",

@@ -37,6 +37,23 @@ columns, never collect to the driver, and push column pruning/filters to
 the scan. Sampling/token predicates can be applied pre-join
 (``prefilter=True``) to prune both sides before the shuffle when exact
 only-in counting of filtered keys is not required.
+
+How plans are built here: every projection, aggregate, prune predicate
+and observation list of the diff and digest plans is SQL expression
+text, handed to ``selectExpr``, ``F.expr`` or ``filter(str)``, with
+identifiers backtick-quoted (``functions/sql.py``). Building costs
+driver round trips, not Spark work: every ``F.*`` call, Column method,
+``alias`` and ``cast`` is at least one py4j round trip to the JVM (plus
+py4j's JVM-view lookups), and a Python list of N arguments costs N+1
+more for its conversion, while a SQL string is parsed on the JVM side
+in one call. In one warm session on a 4-core host, a 16-column
+null-safe compare projection took 1,096 round trips and 195 ms as
+per-column Column chains against 52 and 20 ms as one ``selectExpr``; a
+250-id bucket prune took 1,256 and 211 ms with ``isin`` against 4 and
+27 ms as one ``IN (...)`` string. Columns that callers pass in (token,
+filter, sampler and hash functions) stay Columns. New plan code on the
+production path should do the same; ``tests/test_py4j_budget.py``
+holds the round-trip budget.
 """
 
 from __future__ import annotations
@@ -45,11 +62,12 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_diff_spark.model import STAT_FIELDS, TableSpec
 from cassandra_diff_spark.functions.keys import token_expr
+from cassandra_diff_spark.functions.sql import ident, idents, string_lit
 
 
 #: Mismatch classification values (reference: MismatchType.java:22-28 plus
@@ -68,10 +86,6 @@ class DiffResult:
     partition_detail: DataFrame  # one row per partition key: category + counters
     mismatches: DataFrame  # journal shape: pk cols + token + mismatch_type
     stats: DataFrame  # single row: table + the 9 RangeStats counters
-
-
-def _and_all(cols: Sequence[Column]) -> Column:
-    return reduce(lambda a, b: a & b, cols) if cols else F.lit(True)
 
 
 def build_diff(
@@ -104,10 +118,11 @@ def build_diff(
                   cost of a second (tiny, post-collapse) shuffle for the
                   partition rollup.
     """
-    spec.validate_against(src.columns, tgt.columns)
+    src_cols = src.columns
+    spec.validate_against(src_cols, tgt.columns)
     pk = list(spec.partition_key)
     ck = list(spec.clustering)
-    reg = list(spec.regular_columns(src.columns))
+    reg = list(spec.regular_columns(src_cols))
     tok_fn = token or token_expr
 
     if prefilter:
@@ -139,18 +154,19 @@ def build_diff(
     )
 
 
-def _row_value_counts(reg: Sequence[str]) -> Column:
-    """Count of regular columns whose values match null-safely
+def _row_value_counts(reg: Sequence[str]) -> str:
+    """SQL count of regular columns whose values match null-safely
     (reference: checkRegularColumnEquality, PartitionComparator.java:116-133)."""
     if not reg:
-        return F.lit(0).cast("long")
-    return reduce(
-        lambda a, b: a + b,
-        [F.col(f"s_{c}").eqNullSafe(F.col(f"t_{c}")).cast("long") for c in reg],
+        return "CAST(0 AS BIGINT)"
+    return " + ".join(
+        f"CAST({ident('s_' + c)} <=> {ident('t_' + c)} AS BIGINT)" for c in reg
     )
 
 
-def _pair_sides(src, tgt, pk, cols, align_keys, shuffle_keys=None) -> DataFrame:
+def _pair_sides(
+    src, tgt, pk, cols, align_keys, shuffle_keys=None, rank_by=None
+) -> DataFrame:
     """SINGLE-SHUFFLE row pairing — the engine's core physical trick.
 
     Instead of a full-outer join (which shuffles each side on the full
@@ -170,31 +186,44 @@ def _pair_sides(src, tgt, pk, cols, align_keys, shuffle_keys=None) -> DataFrame:
     the Cassandra data model (primary keys unique; positional mode makes
     the key unique by construction via row_number).
 
+    ``rank_by``: SQL ORDER BY text; when given, each side's rows are
+    numbered ``rn__`` per (pk, side) in that order after the repartition
+    (no extra exchange) — the positional mode's alignment key, so pass
+    ``align_keys=["rn__"]`` with it.
+
     Returns one row per aligned position with s_/t_ column pairs and
     presence flags; group keys (incl. nulls, which group together — the
     same semantics as an eqNullSafe join) become the output pk columns.
     """
-    s = src.select(*cols).withColumn("side__", F.lit(0))
-    t = tgt.select(*cols).withColumn("side__", F.lit(1))
+    sel = [ident(c) for c in cols]
     # shuffle_keys defaults to pk (one shuffle for everything downstream);
     # skew-safe mode passes pk+align_keys so a hot partition key spreads
     # over many tasks — the per-partition rollup then re-shuffles, but on
     # rows already collapsed to one per aligned position
-    u = s.unionByName(t).repartition(*(shuffle_keys or pk))
+    u = (
+        src.selectExpr(*sel, "0 AS side__")
+        .unionByName(tgt.selectExpr(*sel, "1 AS side__"))
+        .repartition(*[ident(c) for c in shuffle_keys or pk])
+    )
+    if rank_by is not None:
+        u = u.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {idents(pk)}, side__ "
+            f"ORDER BY {rank_by}) AS rn__",
+        )
 
     non_key = [c for c in cols if c not in pk and c not in align_keys]
-    payload = F.struct(*[F.col(c) for c in non_key]) if non_key else F.struct(F.lit(1))
-    paired = u.groupBy(*pk, *align_keys).agg(
-        F.max(F.when(F.col("side__") == 0, payload)).alias("s__"),
-        F.max(F.when(F.col("side__") == 1, payload)).alias("t__"),
+    payload = f"struct({idents(non_key)})" if non_key else "struct(1)"
+    paired = u.groupBy(*[ident(c) for c in (*pk, *align_keys)]).agg(
+        F.expr(f"max(CASE WHEN side__ = 0 THEN {payload} END) AS s__"),
+        F.expr(f"max(CASE WHEN side__ = 1 THEN {payload} END) AS t__"),
     )
-    return paired.select(
-        *pk,
-        *align_keys,
-        F.col("s__").isNotNull().alias("s_present"),
-        F.col("t__").isNotNull().alias("t_present"),
-        *[F.col("s__").getField(c).alias(f"s_{c}") for c in non_key],
-        *[F.col("t__").getField(c).alias(f"t_{c}") for c in non_key],
+    return paired.selectExpr(
+        *[ident(c) for c in (*pk, *align_keys)],
+        "s__ IS NOT NULL AS s_present",
+        "t__ IS NOT NULL AS t_present",
+        *[f"s__.{ident(c)} AS {ident('s_' + c)}" for c in non_key],
+        *[f"t__.{ident(c)} AS {ident('t_' + c)}" for c in non_key],
     )
 
 
@@ -213,21 +242,21 @@ def _join_set(src, tgt, pk, ck, reg, skew_safe: bool = False) -> DataFrame:
         src, tgt, pk, cols, align_keys=ck,
         shuffle_keys=(keys if skew_safe else None),
     )
-    both = F.col("s_present") & F.col("t_present")
-    non_key = [c for c in cols if c not in pk and c not in ck]
+    both = "(s_present AND t_present)"
     # clustering + pk columns are group keys, hence trivially equal on an
     # aligned pair; their value-match contribution is |pk|+|ck|-counted
-    key_regs = [c for c in reg if c in pk or c in ck]
-    row_vals = _row_value_counts([c for c in reg if c in non_key]) + F.lit(
-        len(key_regs)
-    ).cast("long")
-    return j.select(
-        *pk,
-        F.col("s_present"),
-        F.col("t_present"),
-        both.alias("ck_eq"),
-        both.alias("in_prefix"),  # set mode: no fail-fast cutoff
-        F.when(both, row_vals).otherwise(F.lit(0)).alias("row_matched_values"),
+    key_regs = [c for c in reg if c in keys]
+    row_vals = (
+        f"{_row_value_counts([c for c in reg if c not in keys])} "
+        f"+ CAST({len(key_regs)} AS BIGINT)"
+    )
+    return j.selectExpr(
+        *[ident(c) for c in pk],
+        "s_present",
+        "t_present",
+        f"{both} AS ck_eq",
+        f"{both} AS in_prefix",  # set mode: no fail-fast cutoff
+        f"CASE WHEN {both} THEN {row_vals} ELSE 0 END AS row_matched_values",
     )
 
 
@@ -241,66 +270,37 @@ def _join_positional(src, tgt, pk, ck, reg, reverse: bool = False) -> DataFrame:
     # clustering order with a full-row tiebreak: file sources (unlike the
     # Cassandra data model) may hold duplicate clustering keys; ordering by
     # every column keeps row numbering deterministic (identical rows are
-    # interchangeable). asc_nulls_first matches CQL/DuckDB NULLS FIRST.
+    # interchangeable). ASC NULLS FIRST matches CQL/DuckDB NULLS FIRST.
     order_cols = ck + [c for c in cols if c not in ck and c not in pk]
     # reverse = every direction flipped, both sides — the reference's
     # reverse-read mode (DiffCluster.java:259-274, trigger Differ.java:219-225)
-    order = [
-        F.col(c).desc_nulls_last() if reverse else F.col(c).asc_nulls_first()
-        for c in order_cols
-    ]
-
-    s = src.select(*cols).withColumn("side__", F.lit(0))
-    t = tgt.select(*cols).withColumn("side__", F.lit(1))
-    u = s.unionByName(t).repartition(*pk)
-    u = u.withColumn(
-        "rn__",
-        F.row_number().over(Window.partitionBy(*pk, "side__").orderBy(*order)),
+    direction = "DESC NULLS LAST" if reverse else "ASC NULLS FIRST"
+    j = _pair_sides(
+        src, tgt, pk, cols, align_keys=["rn__"],
+        rank_by=", ".join(f"{ident(c)} {direction}" for c in order_cols),
     )
 
-    non_key = [c for c in cols if c not in pk]
-    payload = F.struct(*[F.col(c) for c in non_key]) if non_key else F.struct(F.lit(1))
-    j = (
-        u.groupBy(*pk, "rn__")
-        .agg(
-            F.max(F.when(F.col("side__") == 0, payload)).alias("s__"),
-            F.max(F.when(F.col("side__") == 1, payload)).alias("t__"),
-        )
-        .select(
-            *pk,
-            "rn__",
-            F.col("s__").isNotNull().alias("s_present"),
-            F.col("t__").isNotNull().alias("t_present"),
-            *[F.col("s__").getField(c).alias(f"s_{c}") for c in non_key],
-            *[F.col("t__").getField(c).alias(f"t_{c}") for c in non_key],
-        )
-    )
-
-    ck_eq = (
-        F.col("s_present")
-        & F.col("t_present")
-        & _and_all([F.col(f"s_{c}").eqNullSafe(F.col(f"t_{c}")) for c in ck])
+    ck_eq = " AND ".join(
+        ["s_present", "t_present"]
+        + [f"{ident('s_' + c)} <=> {ident('t_' + c)}" for c in ck]
     )
     # pk columns are group keys — trivially equal on an aligned pair, but
     # still value-counted ("regular includes PK", TableSpec.java:84-87)
-    row_vals = _row_value_counts([c for c in reg if c not in pk]) + F.lit(
-        len([c for c in reg if c in pk])
-    ).cast("long")
-    j = j.select(
-        *pk,
-        "rn__",
-        "s_present",
-        "t_present",
-        ck_eq.alias("ck_eq"),
-        F.when(ck_eq, row_vals).otherwise(F.lit(0)).alias("row_matched_values"),
+    row_vals = (
+        f"{_row_value_counts([c for c in reg if c not in pk])} "
+        f"+ CAST({len([c for c in reg if c in pk])} AS BIGINT)"
     )
     # fail-fast prefix: positions strictly before the first non-matching
     # position are the only ones counted (PartitionComparator.java:67-70)
-    wp = Window.partitionBy(*pk)
-    fail_rn = F.min(F.when(~F.col("ck_eq"), F.col("rn__"))).over(wp)
-    return j.withColumn(
-        "in_prefix", fail_rn.isNull() | (F.col("rn__") < fail_rn)
-    )
+    fail_rn = f"min(CASE WHEN NOT ck_eq THEN rn__ END) OVER (PARTITION BY {idents(pk)})"
+    return j.selectExpr(
+        *[ident(c) for c in pk],
+        "rn__",
+        "s_present",
+        "t_present",
+        f"({ck_eq}) AS ck_eq",
+        f"CASE WHEN {ck_eq} THEN {row_vals} ELSE 0 END AS row_matched_values",
+    ).selectExpr("*", f"({fail_rn} IS NULL OR rn__ < {fail_rn}) AS in_prefix")
 
 
 def mismatches_from_detail(partition_detail: DataFrame, pk: Sequence[str]) -> DataFrame:
@@ -308,14 +308,13 @@ def mismatches_from_detail(partition_detail: DataFrame, pk: Sequence[str]) -> Da
     partition_detail frame; exposed so callers can rebuild the mismatch
     sink on an Observation-instrumented detail (job.py single-action path)."""
     return partition_detail.filter(
-        F.col("category").isin(CAT_MISMATCHED, CAT_ONLY_IN_SOURCE, CAT_ONLY_IN_TARGET)
-    ).select(
-        *pk,
+        f"category IN ('{CAT_MISMATCHED}', '{CAT_ONLY_IN_SOURCE}', '{CAT_ONLY_IN_TARGET}')"
+    ).selectExpr(
+        *[ident(c) for c in pk],
         "token",
-        F.when(F.col("category") == CAT_MISMATCHED, F.lit("PARTITION_MISMATCH"))
-        .when(F.col("category") == CAT_ONLY_IN_SOURCE, F.lit("ONLY_IN_SOURCE"))
-        .otherwise(F.lit("ONLY_IN_TARGET"))
-        .alias("mismatch_type"),
+        f"CASE WHEN category = '{CAT_MISMATCHED}' THEN 'PARTITION_MISMATCH' "
+        f"WHEN category = '{CAT_ONLY_IN_SOURCE}' THEN 'ONLY_IN_SOURCE' "
+        "ELSE 'ONLY_IN_TARGET' END AS mismatch_type",
     )
 
 
@@ -329,39 +328,34 @@ def _classify_and_aggregate(
     sampler,
     flat: bool = False,
 ) -> DiffResult:
-    nreg = F.lit(reg_count).cast("long")
-    counted = F.col("ck_eq") & F.col("in_prefix")
+    counted = "ck_eq AND in_prefix"
+    # per-partition flags (max/min over the partition's rows) and
+    # counters (sums of the counted rows' terms)
+    flags = {
+        "has_src": ("max", "CAST(s_present AS INT)"),
+        "has_tgt": ("max", "CAST(t_present AS INT)"),
+        "all_ck_eq": ("min", "CAST(ck_eq AS INT)"),
+    }
+    counters = {
+        "matched_rows": "1",
+        "matched_values": "row_matched_values",
+        "mismatched_values": f"CAST({reg_count} AS BIGINT) - row_matched_values",
+    }
 
+    def agg(fn: str, e: str) -> str:
+        # partition == row on the flat path: the row's own term
+        return e if flat else f"{fn}({e})"
+
+    exprs = [f"{agg(fn, e)} AS {name}" for name, (fn, e) in flags.items()] + [
+        f"CAST({agg('sum', f'CASE WHEN {counted} THEN {e} ELSE 0 END')} AS BIGINT) AS {name}"
+        for name, e in counters.items()
+    ]
+    keys = [ident(c) for c in pk]
     if flat:
         # partition == row: pure projection, no shuffle
-        per_part = joined.select(
-            *pk,
-            F.col("s_present").cast("int").alias("has_src"),
-            F.col("t_present").cast("int").alias("has_tgt"),
-            F.col("ck_eq").cast("int").alias("all_ck_eq"),
-            F.when(counted, 1).otherwise(0).cast("long").alias("matched_rows"),
-            F.when(counted, F.col("row_matched_values"))
-            .otherwise(0)
-            .cast("long")
-            .alias("matched_values"),
-            F.when(counted, nreg - F.col("row_matched_values"))
-            .otherwise(0)
-            .cast("long")
-            .alias("mismatched_values"),
-        )
+        per_part = joined.selectExpr(*keys, *exprs)
     else:
-        per_part = joined.groupBy(*pk).agg(
-            F.max(F.col("s_present").cast("int")).alias("has_src"),
-            F.max(F.col("t_present").cast("int")).alias("has_tgt"),
-            F.min(F.col("ck_eq").cast("int")).alias("all_ck_eq"),
-            F.sum(F.when(counted, 1).otherwise(0)).cast("long").alias("matched_rows"),
-            F.sum(F.when(counted, F.col("row_matched_values")).otherwise(0))
-            .cast("long")
-            .alias("matched_values"),
-            F.sum(F.when(counted, nreg - F.col("row_matched_values")).otherwise(0))
-            .cast("long")
-            .alias("mismatched_values"),
-        )
+        per_part = joined.groupBy(*keys).agg(*[F.expr(e) for e in exprs])
 
     return _finalize_from_per_part(
         per_part, spec, pk, tok_fn=tok_fn, token_filter=token_filter, sampler=sampler
@@ -381,50 +375,42 @@ def _finalize_from_per_part(
     per-partition frame (pk cols + has_src/has_tgt/all_ck_eq/matched_rows/
     matched_values/mismatched_values) and produces the DiffResult
     (category, journal, 9-counter stats)."""
-    token_col = tok_fn(pk).alias("token")
-    per_part = per_part.withColumn("token", token_col)
-
-    in_both = (F.col("has_src") == 1) & (F.col("has_tgt") == 1)
-    skip_pred = (
-        ~token_filter(F.col("token")) if token_filter is not None else F.lit(False)
+    per_part = per_part.withColumn("token", tok_fn(pk))
+    skip = ""
+    if token_filter is not None:
+        per_part = per_part.withColumn("skip__", ~token_filter(F.col("token")))
+        skip = f"WHEN skip__ THEN '{CAT_SKIPPED}' "
+    per_part = per_part.selectExpr(
+        "*",
+        f"CASE WHEN has_tgt = 0 THEN '{CAT_ONLY_IN_SOURCE}' "
+        f"WHEN has_src = 0 THEN '{CAT_ONLY_IN_TARGET}' {skip}"
+        f"WHEN all_ck_eq = 1 AND mismatched_values = 0 THEN '{CAT_MATCHED}' "
+        f"ELSE '{CAT_MISMATCHED}' END AS category",
     )
-    category = (
-        F.when(F.col("has_tgt") == 0, F.lit(CAT_ONLY_IN_SOURCE))
-        .when(F.col("has_src") == 0, F.lit(CAT_ONLY_IN_TARGET))
-        .when(skip_pred, F.lit(CAT_SKIPPED))
-        .when(
-            (F.col("all_ck_eq") == 1) & (F.col("mismatched_values") == 0),
-            F.lit(CAT_MATCHED),
-        )
-        .otherwise(F.lit(CAT_MISMATCHED))
-    )
-    per_part = per_part.withColumn("category", category)
 
     # sampler: silently exclude unsampled in-both, non-skipped partitions
     # (RangeComparator.java:137-143 — only-in and skipped keys unaffected)
     if sampler is not None:
         per_part = per_part.filter(
-            (F.col("category") != CAT_MATCHED)
-            & (F.col("category") != CAT_MISMATCHED)
+            F.expr(f"category != '{CAT_MATCHED}' AND category != '{CAT_MISMATCHED}'")
             | sampler(F.col("token"))
         )
 
-    compared = F.col("category").isin(CAT_MATCHED, CAT_MISMATCHED)
-    partition_detail = per_part.select(
-        *pk,
+    compared = f"category IN ('{CAT_MATCHED}', '{CAT_MISMATCHED}')"
+    partition_detail = per_part.selectExpr(
+        *[ident(c) for c in pk],
         "token",
         "category",
-        F.when(compared, F.col("matched_rows")).otherwise(0).alias("matched_rows"),
-        F.when(compared, F.col("matched_values")).otherwise(0).alias("matched_values"),
-        F.when(compared, F.col("mismatched_values"))
-        .otherwise(0)
-        .alias("mismatched_values"),
-        (F.col("all_ck_eq") == 1).alias("all_clusterings_match"),
+        *[
+            f"CASE WHEN {compared} THEN {c} ELSE 0 END AS {c}"
+            for c in ("matched_rows", "matched_values", "mismatched_values")
+        ],
+        "all_ck_eq = 1 AS all_clusterings_match",
     )
 
     mismatches = mismatches_from_detail(partition_detail, pk)
-    stats = partition_detail.agg(*stats_observation_exprs()).select(
-        F.lit(spec.name).alias("table"), *STAT_FIELDS
+    stats = partition_detail.agg(*stats_observation_exprs()).selectExpr(
+        f"{string_lit(spec.name)} AS `table`", *STAT_FIELDS
     )
 
     return DiffResult(
@@ -509,22 +495,22 @@ def value_mismatch_by_column(
 #: product instead of executing the diff plan twice (job.py uses this);
 #: every DiffResult's ``stats`` aggregates the same expressions.
 def stats_observation_exprs() -> list:
-    def n(cat: str) -> Column:
-        return F.coalesce(
-            F.sum(F.when(F.col("category") == cat, 1).otherwise(0)), F.lit(0)
-        ).cast("long")
+    def n(cat: str) -> str:
+        return f"coalesce(sum(CASE WHEN category = '{cat}' THEN 1 ELSE 0 END), 0)"
 
-    return [
-        n(CAT_MATCHED).alias("matched_partitions"),
-        n(CAT_MISMATCHED).alias("mismatched_partitions"),
-        F.lit(0).cast("long").alias("error_partitions"),
-        n(CAT_SKIPPED).alias("skipped_partitions"),
-        n(CAT_ONLY_IN_SOURCE).alias("only_in_source"),
-        n(CAT_ONLY_IN_TARGET).alias("only_in_target"),
-        F.coalesce(F.sum("matched_rows"), F.lit(0)).cast("long").alias("matched_rows"),
-        F.coalesce(F.sum("matched_values"), F.lit(0)).cast("long").alias("matched_values"),
-        F.coalesce(F.sum("mismatched_values"), F.lit(0)).cast("long").alias("mismatched_values"),
-    ]
+    exprs = {
+        "matched_partitions": n(CAT_MATCHED),
+        "mismatched_partitions": n(CAT_MISMATCHED),
+        "error_partitions": "0",
+        "skipped_partitions": n(CAT_SKIPPED),
+        "only_in_source": n(CAT_ONLY_IN_SOURCE),
+        "only_in_target": n(CAT_ONLY_IN_TARGET),
+        **{
+            c: f"coalesce(sum({c}), 0)"
+            for c in ("matched_rows", "matched_values", "mismatched_values")
+        },
+    }
+    return [F.expr(f"CAST({e} AS BIGINT) AS {name}") for name, e in exprs.items()]
 
 
 def repair_actions(

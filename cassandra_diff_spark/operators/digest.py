@@ -38,7 +38,6 @@ disagree across engines (Java prints 1e7 as '1.0E7').
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 
 from cassandra_diff_spark.model import STAT_FIELDS, TableSpec
 from cassandra_diff_spark.functions.keys import token_expr
+from cassandra_diff_spark.functions.sql import ident, idents, string_lit
 from cassandra_diff_spark.functions.text import md5_hash64, md5_hash64_sql
 from cassandra_diff_spark.operators.diff import (
     DiffResult,
@@ -62,9 +62,10 @@ _NULL_SENTINEL = "\x01NULL\x01"
 _SEP = "\x1f"
 
 
-def default_row_hash(cols: Sequence[str]) -> Column:
-    """Null-position-safe xxhash64 row hash: Spark's hash functions SKIP
-    null children (a null leaves the running seed unchanged), so
+def default_row_hash(cols: Sequence[str]) -> str:
+    """SQL text of the null-position-safe xxhash64 row hash: Spark's
+    hash functions SKIP null children (a null leaves the running seed
+    unchanged), so
     ``xxhash64(a, b)`` hashes ('x', NULL) and (NULL, 'x') identically —
     a drift that moves a value between nullable columns would digest
     clean. Interleaving each value with its ``isnull`` flag makes the
@@ -72,7 +73,50 @@ def default_row_hash(cols: Sequence[str]) -> Column:
     false, <skip>, true) vs (<skip>, true, 'x', false) chain the seed
     through different sequences. This restores the ~2^-60-collision
     contract for the default (non-canonical) digest path."""
-    return F.xxhash64(*[x for c in cols for x in (F.col(c), F.isnull(c))])
+    return "xxhash64(" + ", ".join(f"{ident(c)}, isnull({ident(c)})" for c in cols) + ")"
+
+
+def _digest_aggs(h: str, sum_name: str, xor_name: str) -> list[Column]:
+    """The order-independent digest of hash column ``h``: its sum mod
+    2^61-1 (summed as DECIMAL(38,0)) and its bit_xor."""
+    return [
+        F.expr(
+            f"CAST(sum(CAST({h} AS DECIMAL(38,0))) % {DIGEST_MOD} AS BIGINT) AS {sum_name}"
+        ),
+        F.expr(f"bit_xor({h}) AS {xor_name}"),
+    ]
+
+
+def _bucket_of(tok_fn, pk: Sequence[str], n_buckets: int) -> Column:
+    """A row's digest bucket: ``pmod(token(pk), n_buckets)``."""
+    return F.pmod(tok_fn(pk), F.lit(n_buckets))
+
+
+def _in_buckets(
+    df: DataFrame, bucket: Column, ids: Sequence[int], *,
+    negate: bool = False, or_null: bool = False,
+) -> DataFrame:
+    """``df``'s rows whose ``bucket`` is in ``ids`` (``or_null``: or is
+    null), or with ``negate`` the rest. The ids go in as ONE literal
+    ``IN (...)`` string, which the optimizer turns into an InSet that
+    evaluates map-side in the scan stage. The bucket rides a temporary
+    column, so ``bucket`` may be any Column (the murmur3 UDF too); the
+    optimizer inlines it into the filter and prunes the column. A null
+    bucket is never in ``ids``: ``coalesce`` keeps it from evaluating
+    to null and vanishing from both a subset and its complement."""
+    conds = []
+    if ids:
+        conds.append(f"coalesce(bucket__ IN ({', '.join(str(int(b)) for b in ids)}), false)")
+    if or_null:
+        conds.append("bucket__ IS NULL")
+    if not conds:
+        return df if negate else df.filter("false")
+    pred = " OR ".join(conds)
+    return (
+        df.withColumn("bucket__", bucket)
+        .filter(f"NOT ({pred})" if negate else pred)
+        .drop("bucket__")
+    )
 
 
 def canonical_col_expr(types: dict[str, str], c: str) -> Column:
@@ -135,22 +179,14 @@ def bucket_digests(
     independently-laid-out 100 TB tables comparable by digest at all.
     """
     pk = list(spec.partition_key)
-    cols = list(df.columns)
-    tok = (token or token_expr)(pk)
-    h = row_hash if row_hash is not None else default_row_hash(cols)
+    h = row_hash if row_hash is not None else F.expr(default_row_hash(df.columns))
     return (
         df.select(
-            F.pmod(tok, F.lit(n_buckets)).alias("bucket"),
+            _bucket_of(token or token_expr, pk, n_buckets).alias("bucket"),
             h.alias("h__"),
         )
         .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(F.col("h__").cast("decimal(38,0)")) % F.lit(DIGEST_MOD))
-            .cast("long")
-            .alias("digest_sum"),
-            F.expr("bit_xor(h__)").alias("digest_xor"),
-        )
+        .agg(F.expr("count(1) AS n_rows"), *_digest_aggs("h__", "digest_sum", "digest_xor"))
     )
 
 
@@ -159,31 +195,31 @@ def compare_digests(src_digest: DataFrame, tgt_digest: DataFrame) -> DataFrame:
     on either side with both sides' digests and a ``dirty`` flag (missing
     on a side counts as dirty). At most ``n_buckets`` rows: driver-safe to
     inspect, broadcast-safe to join."""
-    s = src_digest.select(
-        F.col("bucket"),
-        F.col("n_rows").alias("s_n"),
-        F.col("digest_sum").alias("s_sum"),
-        F.col("digest_xor").alias("s_xor"),
+    return _compare_digest_frames(src_digest, tgt_digest, ["bucket"])
+
+
+def _compare_digest_frames(
+    src_digest: DataFrame, tgt_digest: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Full-outer join of two digest frames on ``keys`` with both sides'
+    (n, sum, xor) and the ``dirty`` flag: not all three null-safe equal."""
+
+    def side(d: DataFrame, p: str) -> DataFrame:
+        return d.selectExpr(
+            *[ident(k) for k in keys],
+            f"n_rows AS {p}_n", f"digest_sum AS {p}_sum", f"digest_xor AS {p}_xor",
+        )
+
+    j = side(src_digest, "s").join(side(tgt_digest, "t"), on=keys, how="full_outer")
+    return j.selectExpr(
+        "*", "NOT (s_n <=> t_n AND s_sum <=> t_sum AND s_xor <=> t_xor) AS dirty"
     )
-    t = tgt_digest.select(
-        F.col("bucket"),
-        F.col("n_rows").alias("t_n"),
-        F.col("digest_sum").alias("t_sum"),
-        F.col("digest_xor").alias("t_xor"),
-    )
-    j = s.join(t, on="bucket", how="full_outer")
-    clean = (
-        F.col("s_n").eqNullSafe(F.col("t_n"))
-        & F.col("s_sum").eqNullSafe(F.col("t_sum"))
-        & F.col("s_xor").eqNullSafe(F.col("t_xor"))
-    )
-    return j.withColumn("dirty", ~clean)
 
 
 def dirty_buckets(src_digest: DataFrame, tgt_digest: DataFrame) -> DataFrame:
     """The buckets whose content differs — :func:`compare_digests` filtered
     to dirty rows, bucket ids only."""
-    return compare_digests(src_digest, tgt_digest).filter(F.col("dirty")).select("bucket")
+    return compare_digests(src_digest, tgt_digest).filter("dirty").select("bucket")
 
 
 @dataclass
@@ -219,60 +255,46 @@ def _stats_with_credit(stats: DataFrame, credit: DataFrame, table: str) -> DataF
     table name."""
     return (
         stats.unionByName(credit)
-        .agg(*[F.sum(c).cast("long").alias(c) for c in STAT_FIELDS])
-        .select(F.lit(table).alias("table"), *STAT_FIELDS)
+        .agg(*[F.expr(f"CAST(sum({c}) AS BIGINT) AS {c}") for c in STAT_FIELDS])
+        .selectExpr(f"{string_lit(table)} AS `table`", *STAT_FIELDS)
     )
 
 
 def _clean_credit_frame(
-    src: DataFrame,
+    clean_src: DataFrame,
     pk: Sequence[str],
     ck: Sequence[str],
-    clean_pred: Callable[[DataFrame], Column],
     clean_row_sum: int,
     *,
     n_reg: int,
     rows_from_digests: bool,
     parts_from_digests: bool,
 ) -> DataFrame:
-    """One-row STAT_FIELDS frame crediting the proven-clean buckets: every
-    partition matched, every aligned position matched, every regular value
-    matched. When both counts derive from the already-collected digests the
-    credit is pure driver arithmetic (zero scans); otherwise a keys-only
-    projected scan of the clean subset supplies the distinct counts."""
+    """One-row STAT_FIELDS frame crediting the proven-clean buckets
+    (``clean_src``: the source's rows in them): every partition matched,
+    every aligned position matched, every regular value matched. When
+    both counts derive from the already-collected digests the credit is
+    pure driver arithmetic (zero scans); otherwise a keys-only projected
+    scan of the clean subset supplies the distinct counts."""
+    rows = f"CAST({int(clean_row_sum)} AS BIGINT)" if rows_from_digests else "rows"
     if parts_from_digests:
         # zero-scan clean credit: pure driver arithmetic over the
         # already-collected kilobytes
-        spark = src.sparkSession
-        clean_credit = spark.createDataFrame(
-            [(int(clean_row_sum), int(clean_row_sum))], "parts long, rows long"
+        base = clean_src.sparkSession.createDataFrame(
+            [(int(clean_row_sum),)], "parts long"
         )
     else:
-        aggs = [
-            F.count_distinct(F.struct(*[F.col(c) for c in pk])).alias("parts")
-        ]
+        aggs = [f"count(DISTINCT struct({idents(pk)})) AS parts"]
         if not rows_from_digests:
-            aggs.append(
-                F.count_distinct(
-                    F.struct(*[F.col(c) for c in list(pk) + list(ck)])
-                ).alias("rows")
-            )
-        scanned = src.filter(clean_pred(src)).agg(*aggs)
-        if rows_from_digests:
-            scanned = scanned.withColumn("rows", F.lit(int(clean_row_sum)))
-        clean_credit = scanned
-    return clean_credit.select(
-        F.coalesce(F.col("parts"), F.lit(0)).cast("long").alias("matched_partitions"),
-        F.lit(0).cast("long").alias("mismatched_partitions"),
-        F.lit(0).cast("long").alias("error_partitions"),
-        F.lit(0).cast("long").alias("skipped_partitions"),
-        F.lit(0).cast("long").alias("only_in_source"),
-        F.lit(0).cast("long").alias("only_in_target"),
-        F.coalesce(F.col("rows"), F.lit(0)).cast("long").alias("matched_rows"),
-        (F.coalesce(F.col("rows"), F.lit(0)) * F.lit(n_reg))
-        .cast("long")
-        .alias("matched_values"),
-        F.lit(0).cast("long").alias("mismatched_values"),
+            aggs.append(f"count(DISTINCT struct({idents([*pk, *ck])})) AS rows")
+        base = clean_src.agg(*[F.expr(a) for a in aggs])
+    credit = {
+        "matched_partitions": "coalesce(parts, 0)",
+        "matched_rows": f"coalesce({rows}, 0)",
+        "matched_values": f"coalesce({rows}, 0) * {n_reg}",
+    }
+    return base.selectExpr(
+        *[f"CAST({credit.get(f, '0')} AS BIGINT) AS {f}" for f in STAT_FIELDS]
     )
 
 
@@ -293,8 +315,8 @@ def digest_prune_plan(
 
     Phase 1 runs EXACTLY ONCE, here, as one kilobyte-scale action: both
     sides' bucket digests full-outer-compared and collected to the driver
-    (<= n_buckets rows). The CLEAN bucket ids become a literal
-    ``pmod(token, n).isin(...)`` filter — pruning by the proven-clean set
+    (<= n_buckets rows). The CLEAN bucket ids become one literal
+    ``pmod(token, n) IN (...)`` filter — pruning by the proven-clean set
     rather than the dirty set, so any row whose bucket the digests never
     saw (defensive: a null token under a custom token fn) lands on the
     DIRTY side and gets fully diffed rather than silently skipped. The
@@ -341,17 +363,11 @@ def digest_prune_plan(
     clean_ids = [r.bucket for r in cmp_rows if not r.dirty and r.bucket is not None]
     dirty_ids = [r.bucket for r in cmp_rows if r.dirty]
 
-    def clean_pred(_df: DataFrame) -> Column:
-        if not clean_ids:
-            return F.lit(False)
-        bucket = F.pmod(tok_fn(pk), F.lit(n_buckets))
-        # coalesce: a null bucket (custom token fn over null keys) must
-        # not evaluate to null and vanish from BOTH subsets — route it
-        # dirty, where the full diff handles it
-        return F.coalesce(bucket.isin(clean_ids), F.lit(False))
-
-    src_dirty = src.filter(~clean_pred(src))
-    tgt_dirty = tgt.filter(~clean_pred(tgt))
+    # a null bucket (custom token fn over null keys) is never clean: it
+    # routes dirty, where the full diff handles it
+    bucket = _bucket_of(tok_fn, pk, n_buckets)
+    src_dirty = _in_buckets(src, bucket, clean_ids, negate=True)
+    tgt_dirty = _in_buckets(tgt, bucket, clean_ids, negate=True)
 
     if engine == "colocated":
         from cassandra_diff_spark.operators.bucketed import diff_colocated
@@ -385,7 +401,7 @@ def digest_prune_plan(
     parts_from_digests = not ck and unique_keys
 
     clean_credit = _clean_credit_frame(
-        src, pk, ck, clean_pred, clean_row_sum, n_reg=len(reg),
+        _in_buckets(src, bucket, clean_ids), pk, ck, clean_row_sum, n_reg=len(reg),
         rows_from_digests=rows_from_digests,
         parts_from_digests=parts_from_digests,
     )
@@ -470,11 +486,10 @@ def column_digests(
     """
     pk = list(spec.partition_key)
     ck = list(spec.clustering)
-    tok = (token or token_expr)(pk)
     key_hash = default_row_hash(pk + ck)
 
     def default_col_hash(c: str) -> Column:
-        return F.xxhash64(key_hash, F.col(c), F.isnull(c))
+        return F.expr(f"xxhash64({key_hash}, {ident(c)}, isnull({ident(c)}))")
 
     hash_of = col_hash_for or default_col_hash
     # ONE aggregation with 2 x n_cols + 1 expressions, unpivoted AFTER
@@ -484,40 +499,25 @@ def column_digests(
     # cost n_cols x row materialization; a 200-column table would have
     # pushed 200x the rows through the hash). Same digest math
     # bit-for-bit: identical per-column hash expressions, sum-mod, xor.
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for i, c in enumerate(cols):
-        aggs.append(
-            (F.sum(F.col(f"h{i}__").cast("decimal(38,0)")) % F.lit(DIGEST_MOD))
-            .cast("long")
-            .alias(f"s{i}__")
-        )
-        aggs.append(F.expr(f"bit_xor(h{i}__)").alias(f"x{i}__"))
     g = (
         df.select(
-            F.pmod(tok, F.lit(n_buckets)).alias("bucket"),
+            _bucket_of(token or token_expr, pk, n_buckets).alias("bucket"),
             *[hash_of(c).alias(f"h{i}__") for i, c in enumerate(cols)],
         )
         .groupBy("bucket")
-        .agg(*aggs)
+        .agg(
+            F.expr("count(1) AS n_rows"),
+            *[a for i in range(len(cols))
+              for a in _digest_aggs(f"h{i}__", f"s{i}__", f"x{i}__")],
+        )
     )
-    per_col = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"s{i}__").alias("digest_sum"),
-                F.col(f"x{i}__").alias("digest_xor"),
-            )
-            for i, c in enumerate(cols)
-        ]
+    per_col = ", ".join(
+        f"struct({string_lit(c)} AS `column`, s{i}__ AS digest_sum, x{i}__ AS digest_xor)"
+        for i, c in enumerate(cols)
     )
-    return g.select(
-        "bucket", "n_rows", F.explode(per_col).alias("p")
-    ).select(
-        "bucket",
-        F.col("p.column").alias("column"),
-        "n_rows",
-        F.col("p.digest_sum").alias("digest_sum"),
-        F.col("p.digest_xor").alias("digest_xor"),
+    return g.selectExpr("bucket", "n_rows", f"explode(array({per_col})) AS p").selectExpr(
+        "bucket", "p.`column` AS `column`", "n_rows",
+        "p.digest_sum AS digest_sum", "p.digest_xor AS digest_xor",
     )
 
 
@@ -526,25 +526,7 @@ def compare_column_digests(src_digest: DataFrame, tgt_digest: DataFrame) -> Data
     column): both sides' digests plus a ``dirty`` flag. At most
     n_buckets x n_cols rows — the answer to \"which columns of which
     buckets drifted\" without reading either table again."""
-    s = src_digest.select(
-        "bucket", "column",
-        F.col("n_rows").alias("s_n"),
-        F.col("digest_sum").alias("s_sum"),
-        F.col("digest_xor").alias("s_xor"),
-    )
-    t = tgt_digest.select(
-        "bucket", "column",
-        F.col("n_rows").alias("t_n"),
-        F.col("digest_sum").alias("t_sum"),
-        F.col("digest_xor").alias("t_xor"),
-    )
-    j = s.join(t, on=["bucket", "column"], how="full_outer")
-    clean = (
-        F.col("s_n").eqNullSafe(F.col("t_n"))
-        & F.col("s_sum").eqNullSafe(F.col("t_sum"))
-        & F.col("s_xor").eqNullSafe(F.col("t_xor"))
-    )
-    return j.withColumn("dirty", ~clean)
+    return _compare_digest_frames(src_digest, tgt_digest, ["bucket", "column"])
 
 
 def column_drift_summary(src_digest: DataFrame, tgt_digest: DataFrame) -> DataFrame:
@@ -809,24 +791,11 @@ def column_prune_plan(
     # exist, and when none do the unused branches collapse to literal
     # False — the optimizer then prunes their scans from the plan entirely
     has_null_bucket = any(r.bucket is None for r in cmp_rows)
+    bucket = _bucket_of(tok_fn, pk, n_buckets)
 
-    def in_ids(ids: list, catch_null: bool = False) -> Callable[[DataFrame], Column]:
-        def pred(_df: DataFrame) -> Column:
-            bucket = F.pmod(tok_fn(pk), F.lit(n_buckets))
-            conds = []
-            if ids:
-                conds.append(F.coalesce(bucket.isin(ids), F.lit(False)))
-            if catch_null and has_null_bucket:
-                # null-bucket rows route to the full-width diff
-                conds.append(bucket.isNull())
-            if not conds:
-                return F.lit(False)
-            return reduce(lambda a, b: a | b, conds)
-
-        return pred
-
-    clean_pred, value_pred = in_ids(clean_ids), in_ids(value_ids)
-    key_pred = in_ids(key_ids, catch_null=True)
+    def in_ids(df: DataFrame, ids: list, catch_null: bool = False) -> DataFrame:
+        # null-bucket rows route to the full-width diff
+        return _in_buckets(df, bucket, ids, or_null=catch_null and has_null_bucket)
 
     # value-dirty buckets: diff the pruned projection; spec restricted to
     # the projected regular columns so value counting matches the width
@@ -837,8 +806,8 @@ def column_prune_plan(
         regular=tuple(reg_proj),
     )
     v_res = build_diff(
-        src.filter(value_pred(src)).select(*proj),
-        tgt.filter(value_pred(tgt)).select(*proj),
+        in_ids(src, value_ids).selectExpr(*[ident(c) for c in proj]),
+        in_ids(tgt, value_ids).selectExpr(*[ident(c) for c in proj]),
         proj_spec, align="set", token=tok_fn,
     )
     # clean-column credit: every aligned row in a value-dirty bucket
@@ -848,14 +817,13 @@ def column_prune_plan(
     n_clean_cols = len(reg_all) - len(reg_proj)
     v_detail = v_res.partition_detail.withColumn(
         "matched_values",
-        (F.col("matched_values") + F.col("matched_rows") * F.lit(n_clean_cols))
-        .cast("long"),
+        F.expr(f"CAST(matched_values + matched_rows * {n_clean_cols} AS BIGINT)"),
     )
 
     # key-dirty buckets (plus any null-bucket rows): full-width diff
     k_res = build_diff(
-        src.filter(key_pred(src)), tgt.filter(key_pred(tgt)), spec,
-        align="set", token=tok_fn,
+        in_ids(src, key_ids, catch_null=True), in_ids(tgt, key_ids, catch_null=True),
+        spec, align="set", token=tok_fn,
     )
 
     # clean buckets: unique keys => rows credit from the digests; a flat
@@ -866,7 +834,7 @@ def column_prune_plan(
             srows[r.bucket] = r.s_n  # identical across a bucket's columns
     clean_row_sum = sum(srows.get(b, 0) for b in clean_ids)
     credit = _clean_credit_frame(
-        src, pk, ck, clean_pred, clean_row_sum, n_reg=len(reg_all),
+        in_ids(src, clean_ids), pk, ck, clean_row_sum, n_reg=len(reg_all),
         rows_from_digests=True, parts_from_digests=not ck,
     )
 
@@ -955,19 +923,13 @@ def digest_repair(
         src, tgt, spec, n_buckets=n_buckets, align=align, token=token,
         row_hash_for=row_hash_for,
     )
-    tok_fn = token or token_expr
-    pk = list(spec.partition_key)
     clean_ids = [
         r.bucket for r in plan.compare_rows
         if not r.dirty and r.bucket is not None
     ]
-
-    def dirty_pred(_df: DataFrame) -> Column:
-        if not clean_ids:
-            return F.lit(True)
-        bucket = F.pmod(tok_fn(pk), F.lit(n_buckets))
-        return ~F.coalesce(bucket.isin(clean_ids), F.lit(False))
-
+    bucket = _bucket_of(token or token_expr, list(spec.partition_key), n_buckets)
     return repair_actions(
-        src.filter(dirty_pred(src)), tgt.filter(dirty_pred(tgt)), spec
+        _in_buckets(src, bucket, clean_ids, negate=True),
+        _in_buckets(tgt, bucket, clean_ids, negate=True),
+        spec,
     )

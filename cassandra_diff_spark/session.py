@@ -14,12 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Worker threads of the local master: ``$SPARK_GRAFT_CPUS``, else 32."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def get_spark(
     app_name: str = "cassandra_diff_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

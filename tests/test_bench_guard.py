@@ -140,15 +140,21 @@ class TestMachineHealthProbe:
             assert 0 <= h["steal_pct"] <= 100
 
     def test_summary_line_carries_machine_block(self):
-        """The bench result carries both machine-health probes, so a
-        refactor cannot silently drop them from the BENCH artifacts."""
+        """The bench result carries both machine-health probes and the
+        host shape, so a refactor cannot silently drop them from the
+        BENCH artifacts."""
         sys.path.insert(0, str(REPO))
         import bench
 
         launch, end = {"spin_ms": 1.0}, {"spin_ms": 2.0}
-        out = bench.bench_result({"q": 1.5, "r": 2.0}, {}, 0.1, launch, end)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_CPUS", "3")
+            out = bench.bench_result({"q": 1.5, "r": 2.0}, {}, 0.1, launch, end)
         assert out["machine"] == {"launch": launch, "end": end}
         assert out["value"] == 3.5 and "errors" not in out
+        # the host shape the run saw, so history lines of different
+        # shapes can be told apart
+        assert out["host"] == {"nproc": len(os.sched_getaffinity(0)), "cpus": 3}
 
 
 class TestLiveFlagshipGuard:

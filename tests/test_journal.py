@@ -58,6 +58,27 @@ def test_keyed_write_replaces_its_file(spark, tmp_path):
     assert os.listdir(tmp_path / "job_plan") == ["k.parquet"]
 
 
+def test_vacuum_ages_every_table_with_ts(spark, tmp_path):
+    """Both tables that carry ``ts`` lose their rows once the TTL has
+    passed; a table without ``ts`` is left alone."""
+    import time
+
+    from cassandra_diff_spark.journal import vacuum
+    from cassandra_diff_spark.model import DiffStats
+
+    j = Journal(spark, str(tmp_path))
+    j.update_task_status("job", 0, "t", 0, {}, 10)
+    j.update_task_status("job", 0, "t", 1, {}, 20)
+    j.record_progress("job", 0, "t", 0, 5, DiffStats())
+    j.save_plan_params("job", 1, 2)
+    # now_epoch ten years ahead: every row is past the default 1-year TTL
+    dropped = vacuum(j, now_epoch=time.time() + 10 * 31_536_000)
+    assert dropped == {"task_status": 2, "task_progress": 1}
+    assert j._read("task_status").count() == 0
+    assert j._read("task_progress").count() == 0
+    assert j.plan_params("job") == (1, 2)
+
+
 def _load_tracer():
     path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "tracer.py")
     spec = importlib.util.spec_from_file_location("perfbench_tracer", path)
