@@ -249,10 +249,9 @@ def _diff_planner(cfg: JobConfig, job_id: str, *, whole_table: bool):
     """Choose the job's diff plan kind once — column-digest, digest or
     classic — warning once when a configured digest mode cannot apply.
     ``whole_table``: every unit is a whole table (one split, one chunk).
-    Returns ``plan(s_df, t_df, spec) -> (detail, clean_credit)``:
-    ``detail`` is a lazy partition_detail frame with global counters,
-    ``clean_credit`` a one-row STAT_FIELDS frame for the digest-proven
-    clean buckets, or None on the classic path."""
+    Returns ``plan(s_df, t_df, spec) -> DiffResult``: a lazy
+    partition_detail with global counters, and on the digest paths the
+    ``clean_credit`` of the digest-proven clean buckets."""
     token_filter = sampler = None  # filters shared by every table (P5 / SA1)
     if cfg.specific_tokens:
         token_filter = lambda t: specific_tokens_predicate(  # noqa: E731
@@ -286,8 +285,7 @@ def _diff_planner(cfg: JobConfig, job_id: str, *, whole_table: bool):
         # column-granular pruning: phase 2 reads only pk + drifted columns
         # of value-dirty buckets (operators/digest.py)
         def plan(s_df, t_df, spec):
-            p = column_prune_plan(s_df, t_df, spec, n_buckets=cfg.digest_buckets)
-            return p.result.partition_detail, p.clean_credit
+            return column_prune_plan(s_df, t_df, spec, n_buckets=cfg.digest_buckets).result
 
     elif use_digest:
         # two-phase digest-pruned diff: phase 1 ran once inside
@@ -312,16 +310,15 @@ def _diff_planner(cfg: JobConfig, job_id: str, *, whole_table: bool):
                     src_snapshot_id=f"{job_id}:source",
                     tgt_snapshot_id=f"{job_id}:target",
                 )
-            return p.result.partition_detail, p.clean_credit
+            return p.result
 
     else:
         def plan(s_df, t_df, spec):
-            res = build_diff(
+            return build_diff(
                 s_df, t_df, spec,
                 align=cfg.align, token_filter=token_filter,
                 sampler=sampler, skew_safe=cfg.skew_safe,
             )
-            return res.partition_detail, None
 
     return plan
 
@@ -335,17 +332,18 @@ def _diff_range(
     9 counters and the diff plan runs once, not twice (the custom-rule
     opportunity noted in SURVEY.md §4, realized with observe() instead of
     a Catalyst rule). The clean-bucket credit, when the plan has one, is
-    one more small action."""
-    detail, clean_credit = plan(s_df, t_df, spec)
+    one more small action. If the mismatch write fails, ``res.stats``
+    (credit included) is counted with one direct action instead."""
+    res = plan(s_df, t_df, spec)
     obs = Observation()
-    observed = detail.observe(obs, *stats_observation_exprs())
+    observed = res.partition_detail.observe(obs, *stats_observation_exprs())
     mm = mismatches_from_detail(observed, list(spec.partition_key))
-    if journal.record_mismatches(job_id, bucket, spec.name, mm):
-        stats = DiffStats(**obs.get)
-    else:  # journal sink failed — count with a direct action instead
-        stats = DiffStats.from_row(detail.agg(*stats_observation_exprs()).collect()[0])
-    if clean_credit is not None:
-        stats.accumulate(DiffStats.from_row(clean_credit.collect()[0]))
+    if not journal.record_mismatches(job_id, bucket, spec.name, mm):
+        # journal sink failed — count with a direct action instead
+        return DiffStats.from_row(res.stats.collect()[0])
+    stats = DiffStats(**obs.get)
+    if res.clean_credit is not None:
+        stats.accumulate(DiffStats.from_row(res.clean_credit.collect()[0]))
     return stats
 
 

@@ -25,6 +25,12 @@ the action that runs the diff, so it is written through Spark. run_job
 reads metadata values on the driver; metadata frames (the API, the
 resume anti-join) are read through Spark.
 
+Tables are of two kinds. ``job_plan``, ``task_status``, ``task_progress``
+and ``job_results`` are keyed: one file per key, replaced by a replayed
+write. The others (:data:`APPEND_TABLES`) add a file per write.
+Maintenance keeps that layout: :func:`compact` merges only the append
+tables' files, and :func:`vacuum` ages the keyed tables file by file.
+
 The reference's four index tables (job_id by source cluster / target
 cluster / keyspace / start-hour, JobMetadataDb.java:566-617) are replaced
 by predicate queries over job_summary — Spark needs no manual secondary
@@ -50,6 +56,7 @@ from datetime import datetime, timezone
 from typing import Callable
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,6 +112,35 @@ _ARROW_SCHEMAS = {
 }
 
 
+#: tables whose writes each add a new file (a fresh ``<uuid>.parquet``,
+#: or a Spark append for ``mismatches``); the other tables hold one file
+#: per key, which a replayed write replaces
+APPEND_TABLES = ("job_summary", "task_errors", "partition_errors", "mismatches")
+
+
+def _data_files(d: str) -> list[str]:
+    """Paths of the parquet data files in table directory ``d``: every
+    name but the dot-prefixed temp files and Spark's ``_SUCCESS``
+    markers, which readers skip too ([] while ``d`` does not exist)."""
+    if not os.path.isdir(d):
+        return []
+    return [os.path.join(d, n) for n in sorted(os.listdir(d)) if n[0] not in "._"]
+
+
+def _replace_file(path: str, table: pa.Table) -> None:
+    """Write ``table`` to ``path`` atomically: a dot-prefixed temp file
+    in the same directory, ``os.replace``d over ``path``, so readers see
+    the old file or the new one, never part of either."""
+    tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
+
+
 def _unit_row(
     job_id: str, bucket: int, table: str, split: int, last_token: int, stats: dict
 ) -> dict:
@@ -153,14 +189,10 @@ class Journal:
 
         def write():
             os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
-            try:
-                pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW_SCHEMAS[name]), tmp)
-                os.replace(tmp, os.path.join(d, fname + ".parquet"))
-            except BaseException:
-                with contextlib.suppress(OSError):
-                    os.remove(tmp)
-                raise
+            _replace_file(
+                os.path.join(d, fname + ".parquet"),
+                pa.Table.from_pylist(rows, schema=_ARROW_SCHEMAS[name]),
+            )
 
         return self._best_effort(name if key is None else f"{name}/{key}", write)
 
@@ -177,9 +209,13 @@ class Journal:
         ).to_pylist()
 
     def _read(self, name: str) -> DataFrame | None:
+        """Table ``name`` through Spark: None while it does not exist,
+        an empty frame once :func:`vacuum` has aged every file away."""
         p = self._table(name)
         if not os.path.isdir(p):
             return None
+        if not _data_files(p):
+            return self.spark.createDataFrame([], SCHEMAS[name])
         return self.spark.read.parquet(p)
 
     # ------------------------------------------------------------ lifecycle
@@ -460,44 +496,65 @@ def vacuum(
 ) -> dict:
     """Metadata TTL enforcement (reference: a 1-year metadata TTL,
     MetadataKeyspaceOptions.java:27 / localconfig.yaml:29 — C* ages rows
-    server-side; the parquet journal compacts explicitly).
+    server-side; the parquet journal ages them explicitly).
 
-    Rewrites each table that carries the write-time ``ts`` column —
-    ``task_status`` and ``task_progress`` — dropping rows whose ``ts`` is
-    older than the TTL; returns {table: rows_dropped} for those of them
-    that exist. ``job_summary``, ``job_plan``, ``task_errors``,
-    ``partition_errors``, ``job_results`` and ``mismatches`` have no
-    ``ts`` column and are not aged.
+    Ages each table that carries the write-time ``ts`` column —
+    ``task_status`` and ``task_progress`` — file by file on the driver:
+    a file whose rows are all older than the TTL is deleted, and a file
+    with some expired rows is rewritten under its own name
+    (:func:`_replace_file`). Both tables are keyed, one file per unit or
+    chunk, so a later replayed write still replaces its own file.
+    Returns {table: rows_dropped} for those of them that exist.
+    ``job_summary``, ``job_plan``, ``task_errors``, ``partition_errors``,
+    ``job_results`` and ``mismatches`` have no ``ts`` column and are not
+    aged.
     """
     now = now_epoch if now_epoch is not None else time.time()
-    # unix_timestamp() truncates to whole seconds — floor the cutoff so a
-    # row written in the same second as the cutoff is retained
-    cutoff = int(now - ttl_seconds)
+    # whole seconds, floored: a row written in the cutoff's own second
+    # is retained
+    cutoff = pa.scalar(
+        datetime.fromtimestamp(int(now - ttl_seconds), timezone.utc),
+        _ARROW_TYPES["timestamp"],
+    )
     dropped = {}
     for name in ("task_status", "task_progress"):
-        df = journal._read(name)
-        if df is None:
+        if not os.path.isdir(journal._table(name)):
             continue
-        keep = df.filter(f"ts IS NULL OR unix_timestamp(ts) >= {cutoff}")
-        n_before, n_after = df.count(), keep.count()
-        if n_after < n_before:
-            tmp = journal._table(name) + "__compact"
-            keep.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(journal._table(name))
-            shutil.move(tmp, journal._table(name))
-        dropped[name] = n_before - n_after
+        dropped[name] = 0
+        for path in _data_files(journal._table(name)):
+            t = pq.read_table(path)
+            # Spark-appended files hold INT96 timestamps, read as naive ns
+            ts = t.column("ts").cast(cutoff.type)
+            kept = t.filter(pc.fill_null(pc.greater_equal(ts, cutoff), True))
+            if kept.num_rows == t.num_rows:
+                continue
+            if kept.num_rows == 0:
+                os.remove(path)
+            else:
+                schema = _ARROW_SCHEMAS[name]
+                _replace_file(path, kept.select(schema.names).cast(schema))
+            # Spark's checksum of the old content would fail its next read
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+            dropped[name] += t.num_rows - kept.num_rows
     return dropped
 
 
 def compact(journal: "Journal", target_mb: int = 64) -> dict:
-    """Small-files compaction of the journal's append tables: a long
-    diff job appends one parquet file per task event, so a month of
-    nightly runs turns every journal read (resume filters, the API
-    layer's scans) into a file-listing storm. Rewrites each existing
-    table at ``target_mb`` file granularity via
+    """Small-files compaction of the journal's append tables
+    (:data:`APPEND_TABLES`): each write adds a file to them, so a month
+    of nightly runs turns every journal read (the API layer's scans)
+    into a file-listing storm. Rewrites each such table that holds data
+    at ``target_mb`` file granularity via
     :func:`~cassandra_diff_spark.operators.bucketed.compact_parquet`
-    with the same write-then-swap pattern as :func:`vacuum`; returns
+    (write elsewhere, then swap directories); returns
     ``{table: n_files_after}``.
+
+    The keyed tables (``task_status``, ``task_progress``, ``job_plan``,
+    ``job_results``) are left alone: they hold one file per key, and a
+    replayed keyed write replaces its own file — merged into part files,
+    that row would be duplicated instead. ``running_jobs`` holds mutex
+    markers, not parquet.
 
     Run it from the scheduler between jobs — the swap is not safe
     against a concurrently appending writer (the reference ages rows
@@ -506,12 +563,10 @@ def compact(journal: "Journal", target_mb: int = 64) -> dict:
     from cassandra_diff_spark.operators.bucketed import compact_parquet
 
     out = {}
-    if not os.path.exists(journal.path):
-        return out
-    for name in sorted(os.listdir(journal.path)):
+    for name in APPEND_TABLES:
         src = journal._table(name)
-        if not os.path.isdir(src):
-            continue  # marker files (mutex) are not tables
+        if not _data_files(src):
+            continue
         tmp = src + "__compact"
         out[name] = compact_parquet(
             journal.spark, src, tmp, target_mb=target_mb

@@ -81,11 +81,38 @@ CAT_SKIPPED = "skipped"
 
 @dataclass
 class DiffResult:
-    """Lazy DataFrames; nothing is executed until an action runs."""
+    """The result of every diff formulation (``build_diff``, the digest
+    and column-pruned plans, ``diff_colocated``). Lazy: nothing runs
+    until an action does.
 
-    partition_detail: DataFrame  # one row per partition key: category + counters
-    mismatches: DataFrame  # journal shape: pk cols + token + mismatch_type
-    stats: DataFrame  # single row: table + the 9 RangeStats counters
+    ``partition_detail`` has one row per compared partition key
+    (category + counters). ``clean_credit``, on the digest paths, is the
+    one-row STAT_FIELDS frame of the digest-proven clean buckets, whose
+    partitions the detail does not hold. ``stats`` and ``mismatches`` are
+    derived on access, so a caller that observes the detail itself
+    (job.py) builds neither."""
+
+    partition_detail: DataFrame
+    spec: TableSpec
+    clean_credit: Optional[DataFrame] = None
+
+    @property
+    def stats(self) -> DataFrame:
+        """Single row: table + the 9 RangeStats counters — the detail's
+        :func:`stats_observation_exprs` aggregate plus the clean credit
+        (the reference's commutative RangeStats merge,
+        RangeStats.java:167-178)."""
+        counters = self.partition_detail.agg(*stats_observation_exprs())
+        if self.clean_credit is not None:
+            counters = counters.unionByName(self.clean_credit).agg(
+                *[F.expr(f"CAST(sum({c}) AS BIGINT) AS {c}") for c in STAT_FIELDS]
+            )
+        return counters.selectExpr(f"{string_lit(self.spec.name)} AS `table`", *STAT_FIELDS)
+
+    @property
+    def mismatches(self) -> DataFrame:
+        """Journal shape: pk cols + token + mismatch_type."""
+        return mismatches_from_detail(self.partition_detail, self.spec.partition_key)
 
 
 def build_diff(
@@ -373,8 +400,8 @@ def _finalize_from_per_part(
 ) -> DiffResult:
     """Classification tail shared by every diff formulation: takes a
     per-partition frame (pk cols + has_src/has_tgt/all_ck_eq/matched_rows/
-    matched_values/mismatched_values) and produces the DiffResult
-    (category, journal, 9-counter stats)."""
+    matched_values/mismatched_values) and classifies each partition into
+    the DiffResult's ``partition_detail``."""
     per_part = per_part.withColumn("token", tok_fn(pk))
     skip = ""
     if token_filter is not None:
@@ -407,15 +434,7 @@ def _finalize_from_per_part(
         ],
         "all_ck_eq = 1 AS all_clusterings_match",
     )
-
-    mismatches = mismatches_from_detail(partition_detail, pk)
-    stats = partition_detail.agg(*stats_observation_exprs()).selectExpr(
-        f"{string_lit(spec.name)} AS `table`", *STAT_FIELDS
-    )
-
-    return DiffResult(
-        partition_detail=partition_detail, mismatches=mismatches, stats=stats
-    )
+    return DiffResult(partition_detail=partition_detail, spec=spec)
 
 
 def order_invariance_check(
@@ -451,7 +470,7 @@ def order_invariance_check(
 
 def value_mismatch_by_column(
     src: DataFrame, tgt: DataFrame, spec: TableSpec
-) -> DiffResult | DataFrame:
+) -> DataFrame:
     """J3 drill-down: per-regular-column mismatch counts over aligned rows
     (the per-column residual of checkRegularColumnEquality,
     PartitionComparator.java:116-133). Key columns are part of the
@@ -493,7 +512,7 @@ def value_mismatch_by_column(
 #: ``partition_detail`` frame — attach via ``df.observe(Observation(), *...)``
 #: so one action (e.g. the mismatch write) yields the stats as a side
 #: product instead of executing the diff plan twice (job.py uses this);
-#: every DiffResult's ``stats`` aggregates the same expressions.
+#: :attr:`DiffResult.stats` aggregates the same expressions.
 def stats_observation_exprs() -> list:
     def n(cat: str) -> str:
         return f"coalesce(sum(CASE WHEN category = '{cat}' THEN 1 ELSE 0 END), 0)"
@@ -578,6 +597,30 @@ def repair_actions(
     )
 
 
+def _tagged_union(
+    sources: "Sequence[tuple[str, DataFrame]]", keys: Sequence[str], op: str
+) -> "tuple[list, list, DataFrame]":
+    """Prologue of the N-way operators: check ``sources`` (at least two,
+    unique names, every df carrying the first df's columns) and union
+    them with each row's source name in ``__src``. Returns (keys,
+    payload columns, union)."""
+    if len(sources) < 2:
+        raise ValueError(f"{op} needs at least two sources")
+    names = [n for n, _ in sources]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate source names: {names}")
+    keys = list(keys)
+    cols = list(sources[0][1].columns)
+    tagged = []
+    for name, df in sources:
+        missing = [c for c in cols if c not in df.columns]
+        if missing:
+            raise ValueError(f"source {name!r} lacks columns {missing}")
+        tagged.append(df.select(*cols, F.lit(name).alias("__src")))
+    payload_cols = [c for c in cols if c not in keys]
+    return keys, payload_cols, reduce(lambda a, b: a.unionByName(b), tagged)
+
+
 def diff_kway(
     sources: "Sequence[tuple[str, DataFrame]]",
     keys: Sequence[str],
@@ -612,22 +655,7 @@ def diff_kway(
     once, i.e. N-replica audit at N× the 2-way diff's shuffle volume,
     not C(N,2)×.
     """
-    if len(sources) < 2:
-        raise ValueError("diff_kway needs at least two sources")
-    names = [n for n, _ in sources]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate source names: {names}")
-    keys = list(keys)
-    first = sources[0][1]
-    cols = list(first.columns)
-    payload_cols = [c for c in cols if c not in keys]
-    tagged = []
-    for name, df in sources:
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"source {name!r} lacks columns {missing}")
-        tagged.append(df.select(*cols, F.lit(name).alias("__src")))
-    u = reduce(lambda a, b: a.unionByName(b), tagged)
+    keys, payload_cols, u = _tagged_union(sources, keys, "diff_kway")
 
     # value groups: per (key, whole payload) the holder set — agreeing
     # replicas collapse here, map-side-combinably
@@ -684,22 +712,7 @@ def consensus_state(
     the payload rides the vote as one struct, so a winning row's NULL
     columns stay exactly that row's nulls (no cross-row mixing).
     """
-    if len(sources) < 2:
-        raise ValueError("consensus_state needs at least two sources")
-    names = [n for n, _ in sources]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate source names: {names}")
-    keys = list(keys)
-    first = sources[0][1]
-    cols = list(first.columns)
-    payload_cols = [c for c in cols if c not in keys]
-    tagged = []
-    for name, df in sources:
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"source {name!r} lacks columns {missing}")
-        tagged.append(df.select(*cols, F.lit(name).alias("__src")))
-    u = reduce(lambda a, b: a.unionByName(b), tagged)
+    keys, payload_cols, u = _tagged_union(sources, keys, "consensus_state")
     g = u.groupBy(*keys, *payload_cols).agg(
         F.count(F.lit(1)).alias("__cnt"),
         F.min("__src").alias("__mn"),

@@ -47,11 +47,7 @@ from cassandra_diff_spark.model import STAT_FIELDS, TableSpec
 from cassandra_diff_spark.functions.keys import token_expr
 from cassandra_diff_spark.functions.sql import ident, idents, string_lit
 from cassandra_diff_spark.functions.text import md5_hash64, md5_hash64_sql
-from cassandra_diff_spark.operators.diff import (
-    DiffResult,
-    build_diff,
-    stats_observation_exprs,
-)
+from cassandra_diff_spark.operators.diff import DiffResult, build_diff
 
 #: Modulus for the order-independent sum digest: 2^61-1 (Mersenne), well
 #: under bigint range after the mod, summed as DECIMAL(38,0) so ~1e19 rows
@@ -231,33 +227,22 @@ class DigestPrunePlan:
     aggregation), so however many actions a caller runs over ``result``,
     the digest scans never re-execute.
 
-    ``result``: the dirty-subset diff — observe()/write its
-    partition_detail like any build_diff result (the job runner does).
-    ``clean_credit``: one-row frame (STAT_FIELDS columns) with the clean
-    buckets' matched contribution — a keys-only projected scan of the
-    source's clean subset."""
+    ``result``: the whole table's diff. Its partition_detail covers the
+    dirty subset — observe()/write it like any build_diff result (the
+    job runner does) — and its ``clean_credit`` holds the clean buckets'
+    matched contribution (a keys-only projected scan of the source's
+    clean subset, or driver arithmetic), so ``result.stats`` equals
+    ``build_diff(src, tgt, spec).stats``."""
 
     compare_rows: list  # collected compare_digests rows
     dirty_bucket_ids: list
     n_buckets: int
     result: DiffResult
-    clean_credit: DataFrame
 
     @property
     def dirty_fraction(self) -> float:
         n = sum(1 for r in self.compare_rows if r.dirty)
         return n / self.n_buckets if self.n_buckets else 0.0
-
-
-def _stats_with_credit(stats: DataFrame, credit: DataFrame, table: str) -> DataFrame:
-    """The one-row stats frame of a pruned diff: the dirty subset's
-    STAT_FIELDS counters plus the clean buckets' credit, tagged with the
-    table name."""
-    return (
-        stats.unionByName(credit)
-        .agg(*[F.expr(f"CAST(sum({c}) AS BIGINT) AS {c}") for c in STAT_FIELDS])
-        .selectExpr(f"{string_lit(table)} AS `table`", *STAT_FIELDS)
-    )
 
 
 def _clean_credit_frame(
@@ -409,8 +394,7 @@ def digest_prune_plan(
         compare_rows=cmp_rows,
         dirty_bucket_ids=dirty_ids,
         n_buckets=n_buckets,
-        result=res,
-        clean_credit=clean_credit,
+        result=DiffResult(res.partition_detail, spec, clean_credit),
     )
 
 
@@ -429,14 +413,16 @@ def digest_prune_diff(
 ) -> DiffResult:
     """The two-phase diff: digest compare, then full diff on dirty buckets.
 
-    Produces the same DiffResult (9 counters + mismatch journal) as
-    ``build_diff(src, tgt, spec)``. Clean buckets are diffed-equal by
-    construction, but their matched_rows/matched_values would be missing if
-    we simply dropped them, so the counters are kept exact by:
+    :func:`digest_prune_plan`'s ``result``: the same 9 counters and
+    mismatch journal as ``build_diff(src, tgt, spec)``. Clean buckets are
+    diffed-equal by construction, but their matched_rows/matched_values
+    would be missing if we simply dropped them, so the counters are kept
+    exact by:
       * running the full diff over dirty buckets only, and
-      * adding the clean buckets' contribution — every partition matched,
-        every aligned position matched, every regular value matched — via a
-        union on the stats aggregation.
+      * carrying the clean buckets' contribution — every partition
+        matched, every aligned position matched, every regular value
+        matched — as the result's ``clean_credit``, which
+        :attr:`DiffResult.stats` adds to the detail's counters.
 
     Phase 1 executes once, NOW (see :func:`digest_prune_plan`); the
     returned frames are lazy over the pruned phase-2 plan only.
@@ -445,18 +431,11 @@ def digest_prune_diff(
     :func:`canonical_row_hash` partial) when oracle-reproducible digests
     are needed; default null-position-safe xxhash64 over all columns.
     """
-    plan = digest_prune_plan(
+    return digest_prune_plan(
         src, tgt, spec, n_buckets=n_buckets, align=align, token=token,
         row_hash_for=row_hash_for, skew_safe=skew_safe, engine=engine,
         unique_keys=unique_keys,
-    )
-    return DiffResult(
-        partition_detail=plan.result.partition_detail,
-        mismatches=plan.result.mismatches,
-        stats=_stats_with_credit(
-            plan.result.stats.drop("table"), plan.clean_credit, spec.name
-        ),
-    )
+    ).result
 
 
 def column_digests(
@@ -664,7 +643,12 @@ class ColumnPrunePlan:
     per-(bucket, column) compare rows plus the bucket triage and the
     combined pruned diff. Like :class:`DigestPrunePlan`, phase 1 has
     ALREADY executed; ``result``'s frames are lazy over literal-InSet
-    pruned phase-2 plans only."""
+    pruned phase-2 plans only.
+
+    ``result``: the value- and key-dirty buckets' partition_detail, with
+    GLOBAL counters (the value branch's unread clean columns are
+    credited per matched row), plus the clean buckets' one-row
+    ``clean_credit``."""
 
     compare_rows: list
     n_buckets: int
@@ -672,10 +656,6 @@ class ColumnPrunePlan:
     value_bucket_ids: list  # drift confined to non-key value columns
     key_bucket_ids: list  # key/count drift — full-width diff required
     dirty_value_columns: list  # union of drifted value columns
-    clean_credit: DataFrame  # one-row STAT_FIELDS credit for clean buckets
-    #: the value- and key-dirty buckets' diff; partition_detail counters
-    #: are GLOBAL (the value branch's unread clean columns are credited
-    #: per matched row) and ``stats`` includes ``clean_credit``
     result: DiffResult
 
     @property
@@ -838,7 +818,6 @@ def column_prune_plan(
         rows_from_digests=True, parts_from_digests=not ck,
     )
 
-    detail = v_detail.unionByName(k_res.partition_detail)
     return ColumnPrunePlan(
         compare_rows=cmp_rows,
         n_buckets=n_buckets,
@@ -846,14 +825,7 @@ def column_prune_plan(
         value_bucket_ids=value_ids,
         key_bucket_ids=key_ids,
         dirty_value_columns=dirty_value_cols,
-        clean_credit=credit,
-        result=DiffResult(
-            partition_detail=detail,
-            mismatches=v_res.mismatches.unionByName(k_res.mismatches),
-            stats=_stats_with_credit(
-                detail.agg(*stats_observation_exprs()), credit, spec.name
-            ),
-        ),
+        result=DiffResult(v_detail.unionByName(k_res.partition_detail), spec, credit),
     )
 
 

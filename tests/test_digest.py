@@ -58,6 +58,60 @@ class TestDigestParity:
         assert pruned["mismatched_partitions"] == 1  # the null-pk row
 
 
+def _unique_keys(df, spec: TableSpec):
+    """``df`` with one row per full primary key, the smallest: the
+    Cassandra data model's guarantee, which column pruning requires (the
+    synthetic lineitem repeats some (l_orderkey, l_linenumber) keys)."""
+    keys = [*spec.partition_key, *spec.clustering]
+    rest = [c for c in df.columns if c not in keys]
+    return df.groupBy(*keys).agg(F.min(F.struct(*rest)).alias("r__")).select(*keys, "r__.*")
+
+
+class TestEveryFormulationAgrees:
+    """Every diff formulation returns the one DiffResult, whose ``stats``
+    and ``mismatches`` equal ``build_diff``'s on the same drifted pair —
+    the digest plans' results included, clean-bucket credit and all."""
+
+    @pytest.mark.parametrize("table", ["orders", "lineitem"])
+    def test_stats_and_mismatches_equal_build_diff(self, spark, sf_dir, table):
+        from cassandra_diff_spark.operators.bucketed import diff_colocated
+        from cassandra_diff_spark.operators.digest import (
+            column_prune_diff,
+            column_prune_plan,
+            digest_prune_plan,
+        )
+
+        pair, spec = {
+            "orders": (orders_pair, ORDERS), "lineitem": (lineitem_pair, LINEITEM),
+        }[table]
+        src, tgt = (_unique_keys(df, spec) for df in pair(spark, sf_dir))
+        formulations = {
+            ("digest_prune_plan", "set"): lambda: digest_prune_plan(
+                src, tgt, spec, n_buckets=64).result,
+            ("digest_prune_plan", "positional"): lambda: digest_prune_plan(
+                src, tgt, spec, n_buckets=64, align="positional").result,
+            ("digest_prune_diff", "set"): lambda: digest_prune_diff(
+                src, tgt, spec, n_buckets=64),
+            ("column_prune_plan", "set"): lambda: column_prune_plan(
+                src, tgt, spec, n_buckets=64).result,
+            ("column_prune_diff", "set"): lambda: column_prune_diff(
+                src, tgt, spec, n_buckets=64),
+            ("diff_colocated", "set"): lambda: diff_colocated(
+                src, tgt, spec, warn_on_shuffle=False),
+        }
+
+        def observed(res):
+            return _stats(res), sorted(tuple(r) for r in res.mismatches.collect())
+
+        expected = {
+            align: observed(build_diff(src, tgt, spec, align=align))
+            for align in ("set", "positional")
+        }
+        assert expected["set"][0]["mismatched_partitions"] > 0
+        for (name, align), build in formulations.items():
+            assert observed(build()) == expected[align], (name, align)
+
+
 class TestDigestPruning:
     def test_identical_tables_zero_dirty(self, spark, sf_dir):
         o = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -160,7 +214,7 @@ class TestSingleExecution:
         assert isinstance(plan.compare_rows, list)  # phase 1 already ran
         assert 0 < len(plan.dirty_bucket_ids) <= 64
         for df in (plan.result.partition_detail, plan.result.mismatches,
-                   plan.clean_credit):
+                   plan.result.clean_credit):
             p = df._jdf.queryExecution().optimizedPlan().toString()
             # bit_xor appears ONLY in the digest aggregation; its absence
             # means no downstream action can re-run the digest scans
@@ -176,7 +230,7 @@ class TestSingleExecution:
         src, tgt = orders_pair(spark, sf_dir)
         full = _stats(build_diff(src, tgt, ORDERS))
         plan = digest_prune_plan(src, tgt, ORDERS, n_buckets=64, unique_keys=True)
-        p = plan.clean_credit._jdf.queryExecution().optimizedPlan().toString()
+        p = plan.result.clean_credit._jdf.queryExecution().optimizedPlan().toString()
         assert "parquet" not in p  # no file scan — driver-local relation
         pruned = _stats(
             digest_prune_diff(src, tgt, ORDERS, n_buckets=64, unique_keys=True)

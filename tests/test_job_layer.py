@@ -1072,22 +1072,27 @@ class TestPlanCli:
 
 
 def test_journal_compact_preserves_rows(spark, tmp_path):
-    """journal.compact() collapses per-event micro-files without losing
-    a row, and reads keep working through the swap."""
+    """journal.compact() collapses an append table's per-event files
+    without losing a row, and leaves a keyed table's one file per key."""
+    import glob
+    import os
+
     from cassandra_diff_spark.journal import Journal, compact
 
     j = Journal(spark, str(tmp_path / "jr"))
-    for i in range(6):  # 6 units -> 6 files in task_status
-        j.update_task_status(f"job{i}", 0, "t", i, {}, 0)
-    import glob
-
-    before = len(glob.glob(str(tmp_path / "jr/task_status/*.parquet")))
-    assert before >= 6
+    for i in range(6):  # 6 errors -> 6 files in task_errors
+        j.record_error(f"job{i}", 0, "t", i, None, "boom")
+    for i in range(3):  # 3 units -> 3 keyed files in task_status
+        j.update_task_status("job", 0, "t", i, {}, 0)
+    assert len(glob.glob(str(tmp_path / "jr/task_errors/*.parquet"))) == 6
     n = compact(j, target_mb=64)
-    after = len(glob.glob(str(tmp_path / "jr/task_status/*.parquet")))
-    assert after == n["task_status"] == 1
-    got = sorted(r.job_id for r in j._read("task_status").collect())
+    assert n == {"task_errors": 1}
+    assert len(glob.glob(str(tmp_path / "jr/task_errors/*.parquet"))) == 1
+    got = sorted(r.job_id for r in j._read("task_errors").collect())
     assert got == [f"job{i}" for i in range(6)]
+    assert sorted(os.listdir(tmp_path / "jr/task_status")) == [
+        f"job%7Ct%7C{i}.parquet" for i in range(3)
+    ]
 
 
 def test_cli_compact_journal(spark, pair_dirs, tmp_path, capsys):
@@ -1101,6 +1106,7 @@ def test_cli_compact_journal(spark, pair_dirs, tmp_path, capsys):
     jdir = tmp_path / "jc"
     j = Journal(spark, str(jdir))
     for i in range(5):
+        j.record_error(f"j{i}", 0, "orders", i, None, "boom")
         j.update_task_status(f"j{i}", 0, "orders", i, {}, 0)
     cfg_file = tmp_path / "compact_cfg.yaml"
     cfg_file.write_text(
@@ -1115,8 +1121,11 @@ def test_cli_compact_journal(spark, pair_dirs, tmp_path, capsys):
     rc = main([str(cfg_file), "--compact-journal"])
     assert rc == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"task_status": 1}
-    assert len(glob.glob(str(jdir / "task_status/*.parquet"))) == 1
+    assert out == {"task_errors": 1}
+    assert len(glob.glob(str(jdir / "task_errors/*.parquet"))) == 1
+    assert j._read("task_errors").count() == 5
+    # the keyed table keeps one file per unit
+    assert len(glob.glob(str(jdir / "task_status/*.parquet"))) == 5
     assert j._read("task_status").count() == 5
 
 

@@ -79,6 +79,54 @@ def test_vacuum_ages_every_table_with_ts(spark, tmp_path):
     assert j.plan_params("job") == (1, 2)
 
 
+def test_compact_keeps_keyed_files_and_skips_mutex_dir(spark, tmp_path):
+    """A journal as run_job leaves it — an empty ``running_jobs`` dir and
+    keyed result and unit files — compacts without error, and a replayed
+    finalize or unit write afterwards still replaces its own row."""
+    from cassandra_diff_spark.journal import compact
+    from cassandra_diff_spark.model import DiffStats
+
+    j = Journal(spark, str(tmp_path))
+    assert j.try_acquire_running("job")
+    j.record_error("job", 0, "t", 0, None, "boom")
+    j.update_task_status("job", 0, "t", 0, {"matched_partitions": 5}, 10)
+    j.finalize_job("job", {"t": DiffStats(matched_partitions=5)})
+    assert os.listdir(tmp_path / "running_jobs") == []
+
+    assert compact(j) == {"task_errors": 1}
+    j.finalize_job("job", {"t": DiffStats(matched_partitions=5)})
+    j.update_task_status("job", 0, "t", 0, {"matched_partitions": 5}, 10)
+    assert j._lookup("job_results", ["job_id"]) == [{"job_id": "job"}]
+    assert j.results_from_task_status("job")["t"].matched_partitions == 5
+
+
+def test_vacuum_keeps_keyed_layout(spark, tmp_path):
+    """vacuum deletes a wholly expired unit file and rewrites a partly
+    expired file under its own name; a replayed write of a kept unit
+    then replaces its row instead of adding a second one."""
+    from cassandra_diff_spark.journal import _unit_row, vacuum
+
+    old = datetime(2000, 1, 1, tzinfo=timezone.utc)
+    j = Journal(spark, str(tmp_path))
+    j._write("task_status", [{**_unit_row("job", 0, "t", 0, 10, {}), "ts": old}], "job|t|0")
+    j.update_task_status("job", 0, "t", 1, {}, 20)
+    # a file as Spark's append writer laid it down: one expired, one live row
+    spark.createDataFrame(
+        [{**_unit_row("old", 0, "t", 0, 5, {}), "ts": old}, _unit_row("new", 0, "t", 0, 5, {})],
+        SCHEMAS["task_status"],
+    ).coalesce(1).write.mode("append").parquet(str(tmp_path / "task_status"))
+    def data_files():
+        return sorted(n for n in os.listdir(tmp_path / "task_status") if n[0] not in "._")
+
+    before = data_files()
+    assert vacuum(j) == {"task_status": 2}
+    assert data_files() == [n for n in before if n != "job%7Ct%7C0.parquet"]
+    j.update_task_status("job", 0, "t", 1, {}, 20)
+    rows = j._lookup("task_status", ["job_id", "split"])
+    assert sorted((r["job_id"], r["split"]) for r in rows) == [("job", 1), ("new", 0)]
+    assert sorted(r.job_id for r in j._read("task_status").collect()) == ["job", "new"]
+
+
 def _load_tracer():
     path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "tracer.py")
     spec = importlib.util.spec_from_file_location("perfbench_tracer", path)

@@ -10,8 +10,10 @@ by wrapping the gateway client's ``send_command`` the way
 back.
 
 Each ceiling is the count measured when the budget was set plus 25%.
-The comment beside it gives the count of the Column-API builders these
-plans replaced, measured the same way on the same session setup.
+The comment beside it gives the earlier counts, measured the same way on
+the same session setup: of the Column-API builders these plans replaced,
+and of the builders that also built a stats and a mismatch frame on
+every call.
 """
 
 from __future__ import annotations
@@ -59,9 +61,10 @@ def round_trips(spark):
     return run
 
 
-# table -> ceiling: 239 (orders) and 287 (lineitem) measured, plus 25%;
-# the Column-API builders took 3,439 and 4,169 round trips here
-DIFF_BUDGET = {"orders": 299, "lineitem": 359}
+# table -> ceiling: 170 (orders) and 218 (lineitem) measured, plus 25%;
+# building the stats and mismatch frames on every call took 239 and 287,
+# and the Column-API builders 3,439 and 4,169 round trips here
+DIFF_BUDGET = {"orders": 212, "lineitem": 272}
 
 
 @pytest.mark.parametrize("table", sorted(SPECS))
@@ -81,9 +84,10 @@ def test_diff_build_budget(spark, sf_dir, round_trips, table):
     assert round_trips(build) <= DIFF_BUDGET[table]
 
 
-# 432 measured, plus 25%; with the Column-API prune (``pmod(token).isin(ids)``,
+# 363 measured, plus 25%; building the stats and mismatch frames on every
+# call took 432, and with the Column-API prune (``pmod(token).isin(ids)``,
 # one literal Column per id) and diff builders this took 7,897 round trips
-PRUNE_BUDGET = 540
+PRUNE_BUDGET = 453
 
 
 def test_digest_prune_build_budget(spark, sf_dir, round_trips, monkeypatch):
